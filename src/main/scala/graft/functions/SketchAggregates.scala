@@ -5,6 +5,7 @@ import org.apache.datasketches.frequencies.{ErrorType, ItemsSketch}
 import org.apache.datasketches.memory.Memory
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -112,6 +113,14 @@ case class TopKByScoreAggregate(
     scala.collection.mutable.ArrayBuffer[(Double, Long)]] {
 
   require(k > 0, s"k must be positive, got $k")
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (score.dataType, id.dataType) match {
+      case (DoubleType, LongType) => TypeCheckResult.TypeCheckSuccess
+      case (s, i) => TypeCheckResult.TypeCheckFailure(
+        s"topk_by_score expects (DOUBLE, BIGINT), got " +
+          s"(${s.simpleString}, ${i.simpleString})")
+    }
 
   private type Buf = scala.collection.mutable.ArrayBuffer[(Double, Long)]
 

@@ -277,15 +277,12 @@ object Acc {
   /** A2: resting band = exact (2.5 %, 97.5 %) quantiles of g-force within
     * sleep intervals (`sleep_acc_thresh`,
     * /root/reference/activity_categorize.py:151-162). Exact `percentile`
-    * for oracle parity; `percentile_approx` is the documented 100 TB path. */
-  def restingBand(acc: DataFrame, sleepIntervals: DataFrame,
-                  exact: Boolean = true): (Double, Double) = {
-    val inSleep = Filters.pointInInterval(acc, sleepIntervals, "date_time")
-    val agg = if (exact)
-      inSleep.select(expr("percentile(g_force, array(0.025, 0.975))"))
-    else
-      inSleep.select(expr("percentile_approx(g_force, array(0.025, 0.975), 100000)"))
-    val r = agg.head().getSeq[Double](0)
+    * for oracle parity. */
+  def restingBand(acc: DataFrame,
+                  sleepIntervals: DataFrame): (Double, Double) = {
+    val r = Filters.pointInInterval(acc, sleepIntervals, "date_time")
+      .select(expr("percentile(g_force, array(0.025, 0.975))"))
+      .head().getSeq[Double](0)
     require(r != null,
       "restingBand: no acc samples fall inside the sleep intervals")
     (r(0), r(1))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -9,14 +9,16 @@ import org.apache.spark.sql.types._
   *
   * The reference does this with four kind-sliced pandas transforms glued by
   * concat (/root/reference/raw_data_reformat.py:67-148). Here it is one
-  * declarative per-kind parse + unpivot DAG over a single scan; Catalyst
-  * collapses the projections and the scan is shared.
+  * projection over one scan: a single kind switch maps every raw row to its
+  * array of (kind, data) rows, and `inline` unpivots that array.
   */
 object Normalize {
 
-  /** Kinds whose payload is a scalar or 1-element list
-    * (/root/reference/raw_data_reformat.py:106-112, P13). */
-  val ScalarKinds = Seq("hr current", "hr", "st", "spo2")
+  /** Waveform kinds (P1 family, raw_data_reformat.py:76-80 in the reference):
+    * they keep their array payload ([[waveforms]]) and yield no measurement
+    * rows. */
+  val PpgKinds = Seq("ppg")
+  val AccKinds = Seq("acx", "acy", "acz")
 
   /** activity payload field names, positional
     * (/root/reference/raw_data_reformat.py:125-135). */
@@ -25,73 +27,46 @@ object Normalize {
 
   private val arr = ArrayType(DoubleType)
 
-  /** Parse the raw JSON-string payload into typed columns, then unpivot each
-    * family to the tall (kind, data) shape. Unknown kinds pass through with
-    * null data (the normalize step is total — SURVEY.md §7.4-4).
+  /** Parse the raw JSON-string payload per kind and unpivot it to the tall
+    * (kind, data) shape. Any kind other than bp, activity, multi measure and
+    * the waveforms (hr, hr current, st, spo2, or one the reference never
+    * names) passes through with its scalar payload (the normalize step is
+    * total — SURVEY.md §7.4-4); rows with a null kind are dropped.
     *
     * Input: (jname, date_time, kind, data: STRING-json). Output: measurement
     * rows (jname, date_time, kind, data: DOUBLE).
     */
   def normalizeMeasurements(df: DataFrame): DataFrame = {
-    val parsed = df
-      .withColumn("arr", from_json(col("data"), arr))
-      // defensive scalar extraction, P13: `x[0] if list else x`
-      .withColumn("scalar",
-        coalesce(element_at(col("arr"), 1),
-          expr("try_cast(data AS DOUBLE)")))
-
-    val ids = Seq("jname", "date_time")
-
-    // hr / hr current / st / spo2 → scalar rows
-    val scalars = parsed
-      .filter(col("kind").isin(ScalarKinds: _*))
-      .select((ids.map(col) :+ col("kind") :+
-        col("scalar").as("data")): _*)
-
-    // bp → bp_sys, bp_dia (P14)
-    val bp = parsed.filter(col("kind") === "bp")
-      .select(ids.map(col) :+
-        col("arr").getItem(0).as("bp_sys") :+
-        col("arr").getItem(1).as("bp_dia"): _*)
-      .unpivot(ids.map(col).toArray, Array(col("bp_sys"), col("bp_dia")),
-        "kind", "data")
-
-    // activity → 5 named columns (P15)
-    val activity = parsed.filter(col("kind") === "activity")
-      .select(ids.map(col) ++
-        ActivityFields.zipWithIndex.map { case (f, i) =>
-          col("arr").getItem(i).as(f)
-        }: _*)
-      .unpivot(ids.map(col).toArray, ActivityFields.map(col).toArray,
-        "kind", "data")
-
+    val kind = col("kind")
+    val parsed = from_json(col("data"), arr)
+    def rows(values: (String, Column)*): Column =
+      array(values.map { case (k, v) =>
+        struct(lit(k).as("kind"), v.as("data"))
+      }: _*)
     // multi measure: nested [hr, spo2, [sys, dia], st] (P16). The nested
     // element defeats ARRAY<DOUBLE>; re-parse as ARRAY<STRING> and parse the
     // inner pair separately.
     val mmArr = from_json(col("data"), ArrayType(StringType))
     val mmInner = from_json(element_at(mmArr, 3), arr)
-    val mm = parsed.filter(col("kind") === "multi measure")
-      .select(ids.map(col) :+
-        mmArr.getItem(0).cast(DoubleType).as("mm_hr") :+
-        mmArr.getItem(1).cast(DoubleType).as("mm_spo2") :+
-        mmInner.getItem(0).as("mm_bp_sys") :+
-        mmInner.getItem(1).as("mm_bp_dia") :+
-        mmArr.getItem(3).cast(DoubleType).as("mm_st"): _*)
-      .unpivot(ids.map(col).toArray,
-        Array("mm_hr", "mm_spo2", "mm_bp_sys", "mm_bp_dia", "mm_st")
-          .map(col), "kind", "data")
-
-    // any other kind passes through with its scalar payload (normalize is
-    // total — SURVEY.md §7.4-4); waveform kinds are handled by [[waveforms]]
-    val known = ScalarKinds ++ Seq("bp", "activity", "multi measure",
-      "ppg", "acx", "acy", "acz")
-    val others = parsed
-      .filter(!col("kind").isin(known: _*))
-      .select((ids.map(col) :+ col("kind") :+
-        col("scalar").as("data")): _*)
-
-    scalars.unionByName(bp).unionByName(activity).unionByName(mm)
-      .unionByName(others)
+    val perKind =
+      when(kind.isNull || kind.isin(PpgKinds ++ AccKinds: _*), rows())
+        // bp → bp_sys, bp_dia (P14)
+        .when(kind === "bp", rows("bp_sys" -> parsed.getItem(0),
+          "bp_dia" -> parsed.getItem(1)))
+        // activity → 5 named values (P15)
+        .when(kind === "activity", rows(ActivityFields.zipWithIndex
+          .map { case (f, i) => f -> parsed.getItem(i) }: _*))
+        .when(kind === "multi measure", rows(
+          "mm_hr" -> mmArr.getItem(0).cast(DoubleType),
+          "mm_spo2" -> mmArr.getItem(1).cast(DoubleType),
+          "mm_bp_sys" -> mmInner.getItem(0),
+          "mm_bp_dia" -> mmInner.getItem(1),
+          "mm_st" -> mmArr.getItem(3).cast(DoubleType)))
+        // defensive scalar extraction, P13: `x[0] if list else x`
+        .otherwise(array(struct(kind.as("kind"),
+          coalesce(element_at(parsed, 1), expr("try_cast(data AS DOUBLE)"))
+            .as("data"))))
+    df.select(col("jname"), col("date_time"), inline(perKind))
   }
 
   /** ppg / acc split (P1 family, /root/reference/raw_data_reformat.py:76-80):

@@ -39,8 +39,8 @@ object Pipelines {
     val converted = TimeOps.convertDateTime(raw, offset, zone)
     ReformatOut(
       measurements = Normalize.normalizeMeasurements(converted),
-      ppg = Normalize.waveforms(converted, Seq("ppg")),
-      ac = Normalize.waveforms(converted, Seq("acx", "acy", "acz")),
+      ppg = Normalize.waveforms(converted, Normalize.PpgKinds),
+      ac = Normalize.waveforms(converted, Normalize.AccKinds),
       offsetMs = offset)
   }
 
@@ -140,14 +140,6 @@ object Pipelines {
       partitionCols)
     CategorizeOut(lo, hi, cat,
       timelineFromCategorized(sleep, cat, partitionCols))
-  }
-
-  def categorize(measurements: DataFrame, accWide: DataFrame,
-                 partitionCols: Seq[String] = Nil,
-                 mode: CompatMode = CompatMode.Intended):
-      (Double, Double, DataFrame) = {
-    val out = categorizeFull(measurements, accWide, partitionCols, mode)
-    (out.lo, out.hi, out.timeline)
   }
 
   /** E4 (engine extension — no reference analogue): the standard

@@ -4224,10 +4224,12 @@ object TextOps {
     * logit(d) = bias + Σ_buckets count_d(bucket)·weight(bucket) over
     * [[hashFeatures]] hashed-token counts, label = logit > 0, prob =
     * σ(logit). `weights` is the trained model: (bucket, weight) rows,
-    * |buckets| total — broadcast, so scoring is one map-side explode +
-    * one (doc, bucket) partial-agg + one doc-keyed agg; the model never
-    * shuffles and 100 TB of text streams through unchanged. Docs with no
-    * hashable tokens (null/empty text) still score: logit = bias.
+    * |buckets| total. It is collected when the frame is built and
+    * scored as a plan literal, so scoring is one map-only projection
+    * with no shuffle. A bucket outside [0, numBuckets) fails the call;
+    * when a bucket appears in several rows the last collected row wins.
+    * Docs with no hashable tokens (null/empty text) still score:
+    * logit = bias.
     *
     * Cross-engine note: with integer-valued weights the dot product is
     * exact integer arithmetic in doubles (order-independent); arbitrary

@@ -2518,6 +2518,18 @@ class ExtensionsSpec extends SparkSpec {
     assert(withNull == 4)
   }
 
+  test("topKByScore: a non-DOUBLE score or non-BIGINT id fails analysis") {
+    import graft.functions.SketchAggregates.topKByScore
+    val rows = Seq((1, 0.5f), (2, 0.9f)).toDF("id", "s")
+    intercept[org.apache.spark.sql.AnalysisException](
+      rows.agg(topKByScore(col("s").cast("double"), col("id"), 2)))
+    intercept[org.apache.spark.sql.AnalysisException](
+      rows.agg(topKByScore(col("s"), col("id").cast("long"), 2)))
+    // the valid typing still analyzes and runs
+    assert(rows.agg(topKByScore(col("s").cast("double"),
+      col("id").cast("long"), 2)).head().getSeq[AnyRef](0).size == 2)
+  }
+
   test("kAnonymity: closed-form counts, fully-anonymous corpus reports " +
     "zero risk, violations lists the small classes") {
     // quasi (a,x): 3 rows; (a,y): 1 row; (b,x): 2 rows  → k=3 risk = 3/6

@@ -17,21 +17,39 @@ class NormalizeSpec extends SparkSpec {
       raw("st", "36.5"), // bare scalar, defensive P13 path
       raw("bp", "[118, 76]"),
       raw("activity", "[4021, 180, 95, 60, 12]"),
-      raw("multi measure", "[70, 97, [117, 75], 36.4]")
+      raw("multi measure", "[70, 97, [117, 75], 36.4]"),
+      raw("spo2", "not json"), // neither JSON nor a number: null data
+      raw("hr current", null),
+      raw("mystery", "[3.5]"), // unknown kinds pass through as scalars
+      raw(null, "[5]"), // null kind: dropped
+      raw("ppg", "[1024, 1040]"), // waveforms never become measurements
+      raw("acx", "[0.1, 0.2, 0.3, 0.4, 0.5]")
     ).toDF("jname", "date_time", "kind", "data")
-    val got = Normalize.normalizeMeasurements(df)
-      .select("kind", "data").collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(got("hr") == 72.0)
-    assert(got("st") == 36.5)
-    assert(got("bp_sys") == 118.0 && got("bp_dia") == 76.0)
-    assert(got("step") == 4021.0 && got("Calories") == 180.0 &&
-      got("sleep_light") == 95.0 && got("sleep_deep") == 60.0 &&
-      got("awake") == 12.0)
-    assert(got("mm_hr") == 70.0 && got("mm_spo2") == 97.0 &&
-      got("mm_bp_sys") == 117.0 && got("mm_bp_dia") == 75.0 &&
-      got("mm_st") == 36.4)
-    assert(got.size == 14)
+    val rows = Normalize.normalizeMeasurements(df).collect()
+    assert(rows.forall(r => r.getAs[String]("jname") == "j1" &&
+      r.getAs[java.sql.Timestamp]("date_time") == T))
+    val got = rows.map(r => r.getAs[String]("kind") ->
+      Option(r.getAs[java.lang.Double]("data")).map(_.doubleValue)).toMap
+    assert(got("hr").contains(72.0))
+    assert(got("st").contains(36.5))
+    assert(got("bp_sys").contains(118.0) && got("bp_dia").contains(76.0))
+    assert(got("step").contains(4021.0) && got("Calories").contains(180.0) &&
+      got("sleep_light").contains(95.0) && got("sleep_deep").contains(60.0) &&
+      got("awake").contains(12.0))
+    assert(got("mm_hr").contains(70.0) && got("mm_spo2").contains(97.0) &&
+      got("mm_bp_sys").contains(117.0) && got("mm_bp_dia").contains(75.0) &&
+      got("mm_st").contains(36.4))
+    assert(got("spo2").isEmpty && got("hr current").isEmpty)
+    assert(got("mystery").contains(3.5))
+    assert(got.size == 17 && rows.length == 17)
+    // a bp or activity payload shorter than its field list fails the job
+    // (ANSI array indexing) rather than padding with nulls
+    Seq(raw("bp", "[118]"), raw("activity", "[4021, 180, 95]")).foreach { r =>
+      val short = Seq(r).toDF("jname", "date_time", "kind", "data")
+      val e = intercept[ArrayIndexOutOfBoundsException](
+        Normalize.normalizeMeasurements(short).collect())
+      assert(e.getMessage.contains("INVALID_ARRAY_INDEX"))
+    }
   }
 
   test("waveforms keeps array payload for ppg/acc kinds") {

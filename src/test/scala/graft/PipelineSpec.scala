@@ -52,6 +52,13 @@ class PipelineSpec extends SparkSpec {
     val dir = writeFixture()
     val out = Pipelines.reformat(spark, dir.toString)
     assert(out.offsetMs == 0L)
+    // every measurement kind comes from one parse of the raw JSON
+    val jsonScans = out.measurements.queryExecution.executedPlan
+      .collectLeaves().collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec
+          if f.relation.fileFormat.isInstanceOf[org.apache.spark.sql
+            .execution.datasources.json.JsonFileFormat] => f }
+    assert(jsonScans.size == 1)
     val m = out.measurements.cache()
     // jname extracted from the file name pattern
     assert(m.select("jname").distinct().as[String].collect().toSet ==
@@ -95,8 +102,9 @@ class PipelineSpec extends SparkSpec {
     }.toDF("date_time", "acx", "acy", "acz", "g_force")
       .withColumn("seconds", graft.ops.TimeOps.secondsOfDay($"date_time"))
       .withColumn("bin", graft.ops.TimeOps.secondsBin($"seconds"))
-    val (lo, hi, timeline) = Pipelines.categorize(m, acc)
-    assert(lo <= hi)
+    val out = Pipelines.categorizeFull(m, acc)
+    val timeline = out.timeline
+    assert(out.lo <= out.hi)
     val cats = timeline.select("category").distinct().as[String]
       .collect().toSet
     assert(cats.contains("sleep"))
@@ -114,8 +122,8 @@ class PipelineSpec extends SparkSpec {
     // assumptions (time-ordered, well-formed pairs, 5-minute bins), which
     // is exactly when the quirks are invisible. The dial only diverges on
     // inputs that violate those assumptions (OpsSpec matrix covers that).
-    val (_, _, faithful) = Pipelines.categorize(m, acc,
-      mode = graft.ops.CompatMode.Faithful)
+    val faithful = Pipelines.categorizeFull(m, acc,
+      mode = graft.ops.CompatMode.Faithful).timeline
     val a = timeline.select("category", "start_time", "end_time").collect()
       .map(_.toString).sorted.toSeq
     val b = faithful.select("category", "start_time", "end_time").collect()

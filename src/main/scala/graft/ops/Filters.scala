@@ -71,13 +71,25 @@ object Filters {
     * inside any interval (`df_filter`, /root/reference/filtering_data.py:114-124;
     * boundaries inclusive both ends, quirk Q9). The interval side is tiny →
     * broadcast; Spark plans BroadcastNestedLoopJoin for the non-equi
-    * condition. */
+    * condition, or a BroadcastHashJoin on `keys` when given: a fact row then
+    * matches only the intervals of its own key (its subject). */
   def pointInInterval(fact: DataFrame, intervals: DataFrame,
-                      tsCol: String = "date_time"): DataFrame =
-    fact.join(broadcast(intervals),
-      fact(tsCol) >= intervals("start_time") &&
-        fact(tsCol) <= intervals("end_time"),
+                      tsCol: String = "date_time",
+                      keys: Seq[String] = Nil): DataFrame = {
+    val iv = keyed(intervals, keys)
+    fact.join(broadcast(iv),
+      sameKeys(fact, keys) && fact(tsCol) >= iv("start_time") &&
+        fact(tsCol) <= iv("end_time"),
       "left_semi")
+  }
+
+  /** The interval side of a keyed point-in-interval join, its keys renamed
+    * apart from the fact side's (the two often share lineage). */
+  private def keyed(intervals: DataFrame, keys: Seq[String]): DataFrame =
+    keys.foldLeft(intervals)((d, k) => d.withColumnRenamed(k, s"_piv_$k"))
+
+  private def sameKeys(fact: DataFrame, keys: Seq[String]): Column =
+    keys.map(k => fact(k) === col(s"_piv_$k")).foldLeft(lit(true))(_ && _)
 
   /** J1 at scale: binned point-in-interval semi-join. Same semantics as
     * [[pointInInterval]] (boundaries inclusive both ends) but the join is
@@ -94,23 +106,25 @@ object Filters {
     * filter; an interval spanning B bins contributes B rows to the
     * exploded side. Intervals with `end_time < start_time` match nothing
     * and are dropped before the explode (a negative-range `sequence`
-    * would error). */
+    * would error). With `keys` the equi-join key is (keys, bucket). */
   def pointInIntervalBinned(fact: DataFrame, intervals: DataFrame,
                             tsCol: String = "date_time",
-                            binWidthSec: Long = 3600L): DataFrame = {
+                            binWidthSec: Long = 3600L,
+                            keys: Seq[String] = Nil): DataFrame = {
     require(binWidthSec > 0)
     val wUs = binWidthSec * 1000000L
     def binOf(c: Column): Column = floor(unix_micros(c.cast("timestamp")) / wUs)
-    val iv = intervals
+    val iv = keyed(intervals, keys)
       .filter(col("end_time") >= col("start_time"))
-      .select(col("start_time"), col("end_time"),
+      .select(keys.map(k => col(s"_piv_$k")) ++ Seq(col("start_time"),
+        col("end_time"),
         explode(sequence(binOf(col("start_time")), binOf(col("end_time"))))
-          .as("_pib_bin"))
-    val keyed = fact.withColumn("_pib_bin", binOf(col(tsCol)))
-    keyed.join(iv,
-        keyed("_pib_bin") === iv("_pib_bin") &&
-          keyed(tsCol) >= iv("start_time") &&
-          keyed(tsCol) <= iv("end_time"),
+          .as("_pib_bin")): _*)
+    val binned = fact.withColumn("_pib_bin", binOf(col(tsCol)))
+    binned.join(iv,
+        sameKeys(binned, keys) && binned("_pib_bin") === iv("_pib_bin") &&
+          binned(tsCol) >= iv("start_time") &&
+          binned(tsCol) <= iv("end_time"),
         "left_semi")
       .drop("_pib_bin")
   }

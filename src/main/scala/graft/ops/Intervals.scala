@@ -8,10 +8,25 @@ import org.apache.spark.sql.functions._
   *
   * The reference's two-pointer generator sweep
   * (`subtract_intervals`, /root/reference/activity_categorize.py:104-143) is
-  * inherently sequential; the engine re-expresses it as a boundary-event
-  * sweep — explode interval endpoints into ±1 deltas, running-sum coverage,
-  * emit segments covered by base and not by sub (SURVEY.md §2.8 G2). Fully
-  * relational: partitions by subject key, no driver-side loop.
+  * inherently sequential; the engine re-expresses it as one labelled
+  * boundary-event sweep (SURVEY.md §2.8 G2), fully relational and
+  * partitioned by subject key:
+  *
+  *  - one scan per input: each interval row emits both of its endpoint
+  *    events (+1 at start, −1 at end, per coverage counter) through
+  *    `inline(array(struct…, struct…))`. A union of two selects of the same
+  *    frame would reference it twice, doubling its plan at every nesting
+  *    level;
+  *  - coverage is a running `sum` over a RANGE frame ordered by time, so all
+  *    events at one instant land in one frame and no collapse aggregate is
+  *    needed; one row per distinct instant survives (`t < next_t`);
+  *  - each segment (t, next_t) gets a label from its coverage counts; runs
+  *    of touching segments with the same label merge at their change
+  *    points, in windows over the sweep's own partitioning and order (no
+  *    further shuffle).
+  *
+  * Subtract and intersect are 2-counter calls of [[sweep]]; the pipeline's
+  * timeline is one 3-counter call.
   */
 object Intervals {
 
@@ -31,46 +46,66 @@ object Intervals {
     */
   def subtractIntervals(base: DataFrame, sub: DataFrame,
                         partitionCols: Seq[String] = Nil): DataFrame =
-    sweep(base, sub, partitionCols, _ === 0)
+    twoCounter(base, sub, partitionCols)((b, s) => b > 0 && s === 0)
 
   /** Interval intersection base ∩ sub via the same sweep (engine extension —
     * the reference composes it from two subtracts). */
   def intersectIntervals(base: DataFrame, sub: DataFrame,
                          partitionCols: Seq[String] = Nil): DataFrame =
-    sweep(base, sub, partitionCols, _ > 0)
+    twoCounter(base, sub, partitionCols)((b, s) => b > 0 && s > 0)
 
-  /** The boundary-event sweep: segment (t, next_t) is kept iff base covers
-    * it and `keepSub` holds for sub's coverage of it. */
-  private def sweep(base: DataFrame, sub: DataFrame,
-                    partitionCols: Seq[String],
-                    keepSub: Column => Column): DataFrame = {
+  private def twoCounter(base: DataFrame, sub: DataFrame,
+                         partitionCols: Seq[String])
+                        (keep: (Column, Column) => Column): DataFrame = {
+    def tagged(df: DataFrame, fromBase: Boolean): DataFrame =
+      df.select(partitionCols.map(col) :+ col("start_time") :+
+        col("end_time") :+ lit(fromBase).as("_base"): _*)
+    val isBase = col("_base")
+    sweep(tagged(base, fromBase = true).union(tagged(sub, fromBase = false)),
+      partitionCols, Seq(isBase, !isBase),
+      { case Seq(b, s) => when(keep(b, s), lit(true)) })
+      .drop("label")
+  }
+
+  /** The labelled boundary sweep. Counter i covers a segment once for every
+    * row of `intervals` (partitionCols..., start_time, end_time, ...) that
+    * spans it and satisfies `counters(i)` (a null predicate counts as
+    * false). `label` maps the counters' coverage of a segment to its label;
+    * a null label drops the segment. Touching segments with equal labels
+    * merge, so the output (partitionCols..., start_time, end_time, label)
+    * holds disjoint maximal runs, with touching runs only where the label
+    * changes.
+    */
+  def sweep(intervals: DataFrame, partitionCols: Seq[String],
+            counters: Seq[Column], label: Seq[Column] => Column): DataFrame = {
     val part = partitionCols.map(col)
-    def events(df: DataFrame, b: Int, s: Int): DataFrame =
-      df.select(part :+ col("start_time").as("t") :+
-          lit(b).as("bd") :+ lit(s).as("sd"): _*)
-        .unionAll(df.select(part :+ col("end_time").as("t") :+
-          lit(-b).as("bd") :+ lit(-s).as("sd"): _*))
+    val n = counters.indices
+    def event(t: String, sign: Int): Column =
+      struct(col(t).as("_t") +: n.map(i =>
+        when(counters(i), sign).otherwise(0).as(s"_d$i")): _*)
+    val events = intervals.select(part :+
+      inline(array(event("start_time", 1), event("end_time", -1))): _*)
 
-    val all = events(base, 1, 0).unionAll(events(sub, 0, 1))
-      // collapse simultaneous boundary events so the running sum is
-      // well-defined per distinct instant
-      .groupBy(part :+ col("t"): _*)
-      .agg(sum("bd").as("bd"), sum("sd").as("sd"))
+    val ord = Window.partitionBy(part: _*).orderBy(col("_t"))
+    val upTo = ord.rangeBetween(Window.unboundedPreceding, Window.currentRow)
+    val t = col("_t")
+    val next = lead(t, 1).over(ord)
+    val covered = events
+      .select(part ++ Seq(t, next.as("_next")) ++
+        n.map(i => sum(col(s"_d$i")).over(upTo).as(s"_c$i")): _*)
+      // the events of one instant share one RANGE frame; only the last of
+      // them sees a later instant next
+      .filter(col("_next").isNull || t < col("_next"))
+      .select(part ++ Seq(t, when(col("_next").isNotNull,
+        label(n.map(i => col(s"_c$i")))).as("label")): _*)
 
-    val ord = Window.partitionBy(part: _*).orderBy(col("t"))
-    val run = ord.rowsBetween(Window.unboundedPreceding, 0)
-    val segments = all
-      .withColumn("base_cov", sum(col("bd")).over(run))
-      .withColumn("sub_cov", sum(col("sd")).over(run))
-      .withColumn("next_t", lead(col("t"), 1).over(ord))
-      .filter(col("next_t").isNotNull &&
-        col("base_cov") > 0 && keepSub(col("sub_cov")) &&
-        col("t") < col("next_t"))
-      .select(part :+ col("t").as("start_time") :+
-        col("next_t").as("end_time"): _*)
-
-    // adjacent kept segments share boundary points (splits introduced by
-    // irrelevant endpoints) → merge them back; also dedups overlapping base
-    Windows.mergeIntervals(segments, partitionCols)
+    // keep the instants where the label changes: each opens a run that the
+    // next change point closes
+    covered
+      .withColumn("_prev", lag(col("label"), 1).over(ord))
+      .filter(!(col("label") <=> col("_prev")))
+      .select(part ++ Seq(t.as("start_time"), next.as("end_time"),
+        col("label")): _*)
+      .filter(col("label").isNotNull)
   }
 }

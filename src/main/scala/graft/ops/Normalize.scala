@@ -31,7 +31,9 @@ object Normalize {
     * (kind, data) shape. Any kind other than bp, activity, multi measure and
     * the waveforms (hr, hr current, st, spo2, or one the reference never
     * names) passes through with its scalar payload (the normalize step is
-    * total — SURVEY.md §7.4-4); rows with a null kind are dropped.
+    * total — SURVEY.md §7.4-4): a payload too short for its kind's fields
+    * (`[]`, a one-element bp) yields null data for the missing fields
+    * rather than failing. Rows with a null kind are dropped.
     *
     * Input: (jname, date_time, kind, data: STRING-json). Output: measurement
     * rows (jname, date_time, kind, data: DOUBLE).
@@ -39,6 +41,9 @@ object Normalize {
   def normalizeMeasurements(df: DataFrame): DataFrame = {
     val kind = col("kind")
     val parsed = from_json(col("data"), arr)
+    // positions past a short payload's end read null (`get`, not ANSI
+    // indexing, which would fail the whole job)
+    def at(a: Column, i: Int): Column = get(a, lit(i))
     def rows(values: (String, Column)*): Column =
       array(values.map { case (k, v) =>
         struct(lit(k).as("kind"), v.as("data"))
@@ -47,24 +52,24 @@ object Normalize {
     // element defeats ARRAY<DOUBLE>; re-parse as ARRAY<STRING> and parse the
     // inner pair separately.
     val mmArr = from_json(col("data"), ArrayType(StringType))
-    val mmInner = from_json(element_at(mmArr, 3), arr)
+    val mmInner = from_json(at(mmArr, 2), arr)
     val perKind =
       when(kind.isNull || kind.isin(PpgKinds ++ AccKinds: _*), rows())
         // bp → bp_sys, bp_dia (P14)
-        .when(kind === "bp", rows("bp_sys" -> parsed.getItem(0),
-          "bp_dia" -> parsed.getItem(1)))
+        .when(kind === "bp", rows("bp_sys" -> at(parsed, 0),
+          "bp_dia" -> at(parsed, 1)))
         // activity → 5 named values (P15)
         .when(kind === "activity", rows(ActivityFields.zipWithIndex
-          .map { case (f, i) => f -> parsed.getItem(i) }: _*))
+          .map { case (f, i) => f -> at(parsed, i) }: _*))
         .when(kind === "multi measure", rows(
-          "mm_hr" -> mmArr.getItem(0).cast(DoubleType),
-          "mm_spo2" -> mmArr.getItem(1).cast(DoubleType),
-          "mm_bp_sys" -> mmInner.getItem(0),
-          "mm_bp_dia" -> mmInner.getItem(1),
-          "mm_st" -> mmArr.getItem(3).cast(DoubleType)))
+          "mm_hr" -> at(mmArr, 0).cast(DoubleType),
+          "mm_spo2" -> at(mmArr, 1).cast(DoubleType),
+          "mm_bp_sys" -> at(mmInner, 0),
+          "mm_bp_dia" -> at(mmInner, 1),
+          "mm_st" -> at(mmArr, 3).cast(DoubleType)))
         // defensive scalar extraction, P13: `x[0] if list else x`
         .otherwise(array(struct(kind.as("kind"),
-          coalesce(element_at(parsed, 1), expr("try_cast(data AS DOUBLE)"))
+          coalesce(at(parsed, 0), expr("try_cast(data AS DOUBLE)"))
             .as("data"))))
     df.select(col("jname"), col("date_time"), inline(perKind))
   }

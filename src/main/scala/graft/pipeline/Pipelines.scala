@@ -46,7 +46,8 @@ object Pipelines {
 
   /** E2 — filtering_data.py (/root/reference/filtering_data.py:126-221):
     * drop flatlined time ranges (hr run-length > 20), then clamp vitals to
-    * physiological ranges. */
+    * physiological ranges. A row is kept only by an include interval of its
+    * own `partitionCols` key. */
   def filterNoise(measurements: DataFrame,
                   partitionCols: Seq[String] = Nil,
                   flatlineKind: String = "hr",
@@ -59,7 +60,8 @@ object Pipelines {
       .filter(col("include"))
       .select((partitionCols.map(col) :+ col("start_time") :+
         col("end_time")): _*)
-    val kept = Filters.pointInInterval(measurements, include, "date_time")
+    val kept = Filters.pointInInterval(measurements, include, "date_time",
+      partitionCols)
     Filters.clampKinds(kept, ranges)
   }
 
@@ -102,21 +104,31 @@ object Pipelines {
     * acc window table (activity_categorize.py:312-330): active windows win
     * over sleep; wake-rest is rest windows minus final sleep. The
     * categorized input may come from [[categorizeFull]] or from a stored
-    * `*_acc_category.csv` (the reference's `--acc_cat` shortcut). */
+    * `*_acc_category.csv` (the reference's `--acc_cat` shortcut).
+    *
+    * One 3-counter sweep over (sleep, active, rest) labels a segment
+    * `sleep` where sleep covers it and no active window does, else `rest`
+    * where a rest window covers it: the reference's final sleep
+    * (sleep \ active) and wake rest (rest \ final sleep). The active
+    * windows pass through unchanged. */
   def timelineFromCategorized(sleep: DataFrame, cat: DataFrame,
                               partitionCols: Seq[String] = Nil): DataFrame = {
     val part = partitionCols.map(col)
-    val active = cat.filter(col("category") =!= "rest")
-    val sleepFinal = Intervals.subtractIntervals(sleep,
-      iv(active, partitionCols), partitionCols)
-      .withColumn("category", lit("sleep"))
-    val restWin = cat.filter(col("category") === "rest")
-    val wakeRest = Intervals.subtractIntervals(iv(restWin, partitionCols),
-      iv(sleepFinal, partitionCols), partitionCols)
-      .withColumn("category", lit("rest"))
-    sleepFinal
-      .unionByName(active.select(sleepFinal.columns.map(col): _*))
-      .unionByName(wakeRest)
+    val cols = part ++ Seq(col("start_time"), col("end_time"), col("category"))
+    val active = col("category") =!= "rest"
+    val rest = col("category") === "rest"
+    val isSleep = col("_sleep")
+    val tagged = sleep
+      .select(part ++ Seq(col("start_time"), col("end_time"),
+        lit(null).cast("string").as("category"), lit(true).as("_sleep")): _*)
+      .union(cat.select(cols :+ lit(false).as("_sleep"): _*))
+    val labelled = Intervals.sweep(tagged, partitionCols,
+      Seq(isSleep, !isSleep && active, !isSleep && rest),
+      { case Seq(s, a, r) =>
+        when(s > 0 && a === 0, "sleep").when(r > 0, "rest") })
+      .withColumnRenamed("label", "category")
+    labelled
+      .union(cat.filter(active).select(cols: _*))
       .orderBy((part :+ col("start_time")): _*)
   }
 

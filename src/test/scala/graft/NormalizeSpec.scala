@@ -42,14 +42,32 @@ class NormalizeSpec extends SparkSpec {
     assert(got("spo2").isEmpty && got("hr current").isEmpty)
     assert(got("mystery").contains(3.5))
     assert(got.size == 17 && rows.length == 17)
-    // a bp or activity payload shorter than its field list fails the job
-    // (ANSI array indexing) rather than padding with nulls
-    Seq(raw("bp", "[118]"), raw("activity", "[4021, 180, 95]")).foreach { r =>
-      val short = Seq(r).toDF("jname", "date_time", "kind", "data")
-      val e = intercept[ArrayIndexOutOfBoundsException](
-        Normalize.normalizeMeasurements(short).collect())
-      assert(e.getMessage.contains("INVALID_ARRAY_INDEX"))
-    }
+  }
+
+  test("normalizeMeasurements: short payloads yield null data, not a failed job") {
+    def normalized(r: (String, java.sql.Timestamp, String, String)) =
+      Normalize.normalizeMeasurements(
+          Seq(r).toDF("jname", "date_time", "kind", "data"))
+        .collect().map(r => r.getAs[String]("kind") ->
+          Option(r.getAs[java.lang.Double]("data")).map(_.doubleValue)).toSeq
+    // a payload shorter than its kind's field list pads with nulls
+    assert(normalized(raw("bp", "[118]")) ==
+      Seq("bp_sys" -> Some(118.0), "bp_dia" -> None))
+    assert(normalized(raw("activity", "[4021, 180, 95]")) == Seq(
+      "step" -> Some(4021.0), "Calories" -> Some(180.0),
+      "sleep_light" -> Some(95.0), "sleep_deep" -> None, "awake" -> None))
+    assert(normalized(raw("bp", "[]")) ==
+      Seq("bp_sys" -> None, "bp_dia" -> None))
+    // an empty scalar payload is one null row
+    assert(normalized(raw("hr", "[]")) == Seq("hr" -> None))
+    // a multi measure missing its nested pair and temperature
+    assert(normalized(raw("multi measure", "[70, 97]")) == Seq(
+      "mm_hr" -> Some(70.0), "mm_spo2" -> Some(97.0),
+      "mm_bp_sys" -> None, "mm_bp_dia" -> None, "mm_st" -> None))
+    // ... or with a one-element pair
+    assert(normalized(raw("multi measure", "[70, 97, [117]]")) == Seq(
+      "mm_hr" -> Some(70.0), "mm_spo2" -> Some(97.0),
+      "mm_bp_sys" -> Some(117.0), "mm_bp_dia" -> None, "mm_st" -> None))
   }
 
   test("waveforms keeps array payload for ppg/acc kinds") {

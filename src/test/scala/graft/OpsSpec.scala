@@ -100,6 +100,27 @@ class OpsSpec extends SparkSpec {
     assert(Filters.pointInIntervalBinned(bf, inv).count == 0)
   }
 
+  test("J1 keyed: both join paths match only the intervals of a row's key") {
+    val facts = Seq(("a", ts("2024-01-01 00:05:00")),
+      ("b", ts("2024-01-01 00:05:00")), ("b", ts("2024-01-01 01:05:00")))
+      .toDF("subject", "date_time")
+    // a's interval covers every fact time; b's covers only 01:05
+    val iv = Seq(
+      ("a", ts("2024-01-01 00:00:00"), ts("2024-01-01 02:00:00")),
+      ("b", ts("2024-01-01 01:00:00"), ts("2024-01-01 01:10:00")))
+      .toDF("subject", "start_time", "end_time")
+    val expect = Seq("a 2024-01-01 00:05:00.0", "b 2024-01-01 01:05:00.0")
+    def kept(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => s"${r.getString(0)} ${r.getTimestamp(1)}").sorted.toSeq
+    assert(kept(Filters.pointInInterval(facts, iv, keys = Seq("subject"))) ==
+      expect)
+    for (w <- Seq(60L, 3600L))
+      assert(kept(Filters.pointInIntervalBinned(facts, iv, binWidthSec = w,
+        keys = Seq("subject"))) == expect, s"binWidthSec=$w")
+    // without keys, a's interval keeps b's early row too
+    assert(Filters.pointInInterval(facts, iv).count == 3)
+  }
+
   // ---- Windows -----------------------------------------------------------
 
   test("W1: dedupConsecutive keeps first row and change points") {
@@ -256,6 +277,111 @@ class OpsSpec extends SparkSpec {
       .toDF("start_time", "end_time")
     assert(intervalsOf(Intervals.intersectIntervals(a, b)) ==
       Seq(("2024-01-01 01:00:00.0", "2024-01-01 02:00:00.0")))
+  }
+
+  test("J3 property: keyed subtract and intersect equal the bitmap model " +
+    "on shared instants, degenerate, duplicate and nested intervals") {
+    // endpoints on a 5-minute grid, so many intervals share an instant
+    val rnd = new scala.util.Random(4242)
+    val Min = 60000L
+    def at(m: Int) = new java.sql.Timestamp(86400000L + m * Min)
+    def mk(n: Int): Seq[(String, Int, Int)] = {
+      val drawn = Seq.fill(n) {
+        val s = 5 * rnd.nextInt(40); val e = s + 5 * rnd.nextInt(7)
+        (if (rnd.nextBoolean()) "a" else "b", s, e) // e == s: degenerate
+      }
+      val nested = drawn.collect { case (k, s, e) if e - s >= 15 =>
+        (k, s + 5, e - 5) }
+      drawn ++ drawn.take(3) ++ nested ++ Seq(("a", 50, 50), ("b", 0, 0))
+    }
+    def frame(ivs: Seq[(String, Int, Int)]) = ivs
+      .map { case (k, s, e) => (k, at(s), at(e)) }
+      .toDF("subject", "start_time", "end_time")
+    // the model: one bit per minute cell [m, m+1), per key
+    def cells(ivs: Seq[(String, Int, Int)]): Set[(String, Int)] =
+      ivs.flatMap { case (k, s, e) => (s until e).map(k -> _) }.toSet
+    def runs(cs: Set[(String, Int)]): Seq[(String, Long, Long)] =
+      cs.groupBy(_._1).toSeq.flatMap { case (k, kc) =>
+        val ms = kc.map(_._2).toSeq.sorted
+        ms.foldLeft(List.empty[(Int, Int)]) {
+          case ((s, e) :: rest, m) if m == e => (s, m + 1) :: rest
+          case (acc, m) => (m, m + 1) :: acc
+        }.map { case (s, e) => (k, at(s).getTime, at(e).getTime) }
+      }.sorted
+    def got(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, Long)] =
+      df.collect().map(r => (r.getString(0), r.getTimestamp(1).getTime,
+        r.getTimestamp(2).getTime)).toSeq.sorted
+
+    for (round <- 0 until 4) {
+      val base = mk(25); val sub = mk(15)
+      val (b, s) = (frame(base), frame(sub))
+      assert(got(Intervals.subtractIntervals(b, s, Seq("subject"))) ==
+        runs(cells(base) -- cells(sub)), s"subtract, round $round")
+      assert(got(Intervals.intersectIntervals(b, s, Seq("subject"))) ==
+        runs(cells(base) intersect cells(sub)), s"intersect, round $round")
+    }
+  }
+
+  test("timeline: one labelled sweep equals the two-subtract formula") {
+    // net sleep and a categorized window table as a stored --acc_cat file
+    // may hold them: overlapping rest and active windows, duplicates
+    val rnd = new scala.util.Random(77)
+    val Cats = Seq("rest", "rest", "low active", "high active")
+    def at(m: Int) = new java.sql.Timestamp(86400000L + m * 60000L)
+    def sleepFrame() = Seq.fill(6) {
+      val s = 10 * rnd.nextInt(30)
+      (if (rnd.nextBoolean()) "a" else "b", at(s), at(s + 10 * rnd.nextInt(8)))
+    }.toDF("subject", "start_time", "end_time")
+    def catFrame() = {
+      val ws = Seq.fill(20) {
+        val s = 5 * rnd.nextInt(60)
+        (if (rnd.nextBoolean()) "a" else "b", at(s),
+          at(s + 5 * (1 + rnd.nextInt(4))), Cats(rnd.nextInt(Cats.size)))
+      }
+      (ws ++ ws.take(2)).toDF("subject", "start_time", "end_time", "category")
+    }
+    def twoSubtracts(sleep: org.apache.spark.sql.DataFrame,
+                     cat: org.apache.spark.sql.DataFrame,
+                     part: Seq[String]) = {
+      def iv(df: org.apache.spark.sql.DataFrame) =
+        df.select((part :+ "start_time" :+ "end_time").map(col): _*)
+      val active = cat.filter(col("category") =!= "rest")
+      val sleepFinal = Intervals.subtractIntervals(sleep, iv(active), part)
+        .withColumn("category", lit("sleep"))
+      val wakeRest = Intervals.subtractIntervals(
+          iv(cat.filter(col("category") === "rest")), iv(sleepFinal), part)
+        .withColumn("category", lit("rest"))
+      sleepFinal
+        .unionByName(active.select(sleepFinal.columns.map(col): _*))
+        .unionByName(wakeRest)
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(df.columns.sorted.map(col): _*).collect()
+        .map(_.toString).sorted.toSeq
+    for (round <- 0 until 3) {
+      val (sleep, cat) = (sleepFrame(), catFrame())
+      assert(rows(graft.pipeline.Pipelines.timelineFromCategorized(sleep,
+        cat, Seq("subject"))) == rows(twoSubtracts(sleep, cat,
+        Seq("subject"))), s"keyed, round $round")
+      val (s1, c1) = (sleep.filter(col("subject") === "a"),
+        cat.filter(col("subject") === "a"))
+      assert(rows(graft.pipeline.Pipelines.timelineFromCategorized(s1, c1)) ==
+        rows(twoSubtracts(s1, c1, Nil)), s"unkeyed, round $round")
+    }
+  }
+
+  test("plan shape: nested subtracts reference each input once") {
+    // leaves told apart by row count; the innermost has one row
+    val leaves = (1 to 4).map(n => (0 until n).map(i =>
+      (new java.sql.Timestamp(86400000L + i * 600000L),
+        new java.sql.Timestamp(86400000L + i * 600000L + 300000L)))
+      .toDF("start_time", "end_time"))
+    val nested = leaves.tail.foldLeft(leaves.head)(
+      Intervals.subtractIntervals(_, _))
+    val scans = nested.queryExecution.optimizedPlan.collectLeaves().collect {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        l.data.size }
+    assert(scans.sorted == Seq(1, 2, 3, 4))
   }
 
   // ---- CompatMode matrix (SURVEY §7.4-3; VERDICT r2 item 6) --------------

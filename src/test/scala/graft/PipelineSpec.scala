@@ -48,6 +48,16 @@ class PipelineSpec extends SparkSpec {
     dir
   }
 
+  /** Synthetic wide acc: quiet during sleep hours (6-9h), active at
+    * 12-13h. */
+  private def accFixture() = (0 until 24 * 12).map { i =>
+    val t = new java.sql.Timestamp(Day + i * 300000L)
+    val g = if (i >= 144 && i < 156) 5.0 + (i % 3) else 1.0 + (i % 5) * 0.01
+    (t, 0.0, 0.0, g, g)
+  }.toDF("date_time", "acx", "acy", "acz", "g_force")
+    .withColumn("seconds", graft.ops.TimeOps.secondsOfDay($"date_time"))
+    .withColumn("bin", graft.ops.TimeOps.secondsBin($"seconds"))
+
   test("E1 reformat: jname tagging, offset, tagged-union normalize") {
     val dir = writeFixture()
     val out = Pipelines.reformat(spark, dir.toString)
@@ -94,14 +104,7 @@ class PipelineSpec extends SparkSpec {
   test("E3 categorize: sleep/rest/active timeline tiles without overlap") {
     val dir = writeFixture()
     val m = Pipelines.reformat(spark, dir.toString).measurements
-    // synthetic wide acc: quiet during sleep hours (6-9h), active at 12-13h
-    val acc = (0 until 24 * 12).map { i =>
-      val t = new java.sql.Timestamp(Day + i * 300000L)
-      val g = if (i >= 144 && i < 156) 5.0 + (i % 3) else 1.0 + (i % 5) * 0.01
-      (t, 0.0, 0.0, g, g)
-    }.toDF("date_time", "acx", "acy", "acz", "g_force")
-      .withColumn("seconds", graft.ops.TimeOps.secondsOfDay($"date_time"))
-      .withColumn("bin", graft.ops.TimeOps.secondsBin($"seconds"))
+    val acc = accFixture()
     val out = Pipelines.categorizeFull(m, acc)
     val timeline = out.timeline
     assert(out.lo <= out.hi)
@@ -129,6 +132,44 @@ class PipelineSpec extends SparkSpec {
     val b = faithful.select("category", "start_time", "end_time").collect()
       .map(_.toString).sorted.toSeq
     assert(a == b, "Faithful diverged from Intended on assumption-clean input")
+  }
+
+  test("E3 plan: the timeline plans at most 10 exchanges") {
+    val dir = writeFixture()
+    val m = Pipelines.reformat(spark, dir.toString).measurements
+    val plan = Pipelines.categorizeFull(m, accFixture()).timeline
+      .queryExecution.executedPlan
+    val initial = plan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.initialPlan
+      case p => p
+    }
+    val exchanges = initial.collect {
+      case e: org.apache.spark.sql.execution.exchange.Exchange => e }
+    assert(exchanges.size <= 10, initial.treeString)
+  }
+
+  test("E2 filter: each subject keeps only its own include intervals") {
+    // A's hr flatlines for 30 minutes while B's varies at the same instants,
+    // so B's include intervals cover A's flatline
+    def at(m: Int) = new java.sql.Timestamp(Day + m * 60000L)
+    val rows =
+      (0 until 30).map(i => ("A", at(i), "hr", 70.0)) ++
+        (30 until 40).map(i => ("A", at(i), "hr", 60.0 + i % 7)) ++
+        (0 until 40).map(i => ("B", at(i), "hr", 60.0 + i % 13)) ++
+        Seq(("A", at(10), "spo2", 97.0), ("A", at(35), "spo2", 96.0),
+          ("B", at(10), "spo2", 95.0))
+    val m = rows.toDF("subject", "date_time", "kind", "data")
+    def filtered(df: org.apache.spark.sql.DataFrame) =
+      Pipelines.filterNoise(df, Seq("subject")).collect().map(_.toString)
+        .sorted.toSeq
+    val together = filtered(m)
+    val alone = Seq("A", "B")
+      .flatMap(s => filtered(m.filter($"subject" === s))).sorted
+    assert(together == alone)
+    val a = Pipelines.filterNoise(m, Seq("subject")).filter($"subject" === "A")
+    assert(a.filter($"date_time" < at(30)).count() == 0)
+    assert(a.count() == 11) // 10 varied hr rows and the spo2 row at 35
   }
 
   test("E4 curate: gate, exact dedup, near-dup, split, decontamination") {

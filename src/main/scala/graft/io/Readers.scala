@@ -60,14 +60,14 @@ object Readers {
     * result splits into (good, bad) frames — bad rows keep their raw line
     * for quarantine sinks instead of poisoning the batch or failing it.
     *
-    * The parsed frame is cached before splitting: Spark refuses a filter
-    * that references ONLY the internal corrupt-record column of a live
-    * JSON scan (SPARK-21610), and the cache also makes the two branches
-    * share one parse. Caller unpersists via the returned handle when both
-    * sides are consumed. */
+    * The parsed frame is a lazy local checkpoint (the E4 pattern): Spark
+    * refuses a filter that references ONLY the internal corrupt-record
+    * column of a live JSON scan (SPARK-21610), a filter over checkpointed
+    * rows is no such scan, and the two branches share one parse. The
+    * blocks are released once both frames are unreferenced. */
   def loadJsonlRouted(spark: SparkSession, path: String,
                       schema: org.apache.spark.sql.types.StructType)
-      : (DataFrame, DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame) = {
     val corruptCol = "_corrupt_record"
     val full = schema.add(corruptCol,
       org.apache.spark.sql.types.StringType)
@@ -76,11 +76,11 @@ object Readers {
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", corruptCol)
       .json(path)
-      .cache()
+      .localCheckpoint(eager = false)
     val good = parsed.filter(col(corruptCol).isNull).drop(corruptCol)
     val bad = parsed.filter(col(corruptCol).isNotNull)
       .select(col(corruptCol).as("raw_line"))
-    (good, bad, parsed)
+    (good, bad)
   }
 
   /** ORC source — pair of [[Writers.orc]]; Spark's native ORC scan, with

@@ -15,9 +15,13 @@ object TimeOps {
     * round((refMs − min(time)) / 15min) · 15min
     * (/root/reference/raw_data_reformat.py:39-56). One global min-agg; the
     * scalar comes back to the driver (it is genuinely a scalar — the
-    * reference wrote it to `timestamp_diff.txt`, quirk Q3; we return it). */
+    * reference wrote it to `timestamp_diff.txt`, quirk Q3; we return it).
+    * Requires at least one record with a non-null `time`. */
   def deriveClockOffsetMs(raw: DataFrame, refEpochMs: Long): Long = {
-    val minTime = raw.agg(min(col("time"))).head().getLong(0)
+    val row = raw.agg(min(col("time"))).head()
+    require(!row.isNullAt(0),
+      "cannot derive a clock offset: the input has no record with a time")
+    val minTime = row.getLong(0)
     Math.round((refEpochMs - minTime).toDouble / OffsetQuantumMs) *
       OffsetQuantumMs
   }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.io.Readers
 import graft.ops._
 
@@ -16,23 +17,35 @@ import graft.ops._
   */
 object Pipelines {
 
+  /** The three tables of one [[reformat]] call. They share one parse of
+    * the raw JSON, which is dropped when all three are unreferenced. */
+  case class ReformatOut(measurements: DataFrame, ppg: DataFrame,
+                         ac: DataFrame, offsetMs: Long)
+
   /** E1 — raw_data_reformat.py (/root/reference/raw_data_reformat.py:204-264):
     * glob-scan watch JSON, align the watch clock, convert epoch-ms, split
     * and normalize the tagged-union payloads.
+    *
+    * The JSON is parsed once per call: the scan is a lazy disk-only local
+    * checkpoint (the E4 pattern), so the offset derivation and all three
+    * outputs read the same blocks. No job fires while the frames are
+    * built; the first action parses the files and stores the blocks, and
+    * the blocks are released once the frames are unreferenced, so callers
+    * have nothing to unpersist.
     *
     * @param refEpochMs optional reference-clock instant (the Excel min time
     *                   in the reference) from which the offset is derived
     * @param offsetMs   explicit offset (the reference's `-t`); wins over
     *                   refEpochMs
     */
-  case class ReformatOut(measurements: DataFrame, ppg: DataFrame,
-                         ac: DataFrame, offsetMs: Long)
-
   def reformat(spark: SparkSession, inputDir: String,
                refEpochMs: Option[Long] = None,
                offsetMs: Option[Long] = None,
                zone: String = "UTC"): ReformatOut = {
+    // DISK_ONLY: a memory-backed checkpoint raises the heap peak and the
+    // blocks are read back once per output anyway
     val raw = Readers.loadRawJson(spark, inputDir)
+      .localCheckpoint(eager = false, StorageLevel.DISK_ONLY)
     val offset = offsetMs
       .orElse(refEpochMs.map(r => TimeOps.deriveClockOffsetMs(raw, r)))
       .getOrElse(0L)

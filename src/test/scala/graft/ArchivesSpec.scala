@@ -19,13 +19,12 @@ class ArchivesSpec extends SparkSpec {
         |""".stripMargin)
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("text", StringType)))
-    val (good, bad, handle) =
+    val (good, bad) =
       graft.io.Readers.loadJsonlRouted(spark, dir.toString, schema)
     assert(good.columns.toSeq == Seq("id", "text"))
     assert(good.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 3L))
     val badLines = bad.collect().map(_.getString(0)).toSeq
     assert(badLines.size == 1 && badLines.head.contains("missing comma"))
-    handle.unpersist()
   }
 
   test("zipEntries enumerates members; zipSummary counts per extension") {

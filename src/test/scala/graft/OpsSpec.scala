@@ -33,6 +33,15 @@ class OpsSpec extends SparkSpec {
     assert(TimeOps.deriveClockOffsetMs(raw, 2000000L) == 900000L)
   }
 
+  test("P7: clock offset of an input without times names the problem") {
+    for (raw <- Seq(Seq.empty[Long].toDF("time"),
+                    Seq(Option.empty[Long]).toDF("time"))) {
+      val e = intercept[IllegalArgumentException](
+        TimeOps.deriveClockOffsetMs(raw, 2800000L))
+      assert(e.getMessage.contains("no record with a time"))
+    }
+  }
+
   // ---- Filters -----------------------------------------------------------
 
   test("P3: band predicate keeps NaN when asked") {

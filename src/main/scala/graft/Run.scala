@@ -386,12 +386,16 @@ object Run {
     val ext = opts.getOrElse("-e", "csv")
     val measurements = loadComputedAny(spark,
       inputFiles(opts, s"*.$ext"))
-    val sleep = Pipelines.sleepIntervals(measurements)
-    val timeline = opts.get("--acc_cat") match {
+    def writeTimeline(timeline: DataFrame): Unit =
+      writeSingleCsv(timeline
+        .select("start_time", "end_time", "category").orderBy("start_time"),
+        Paths.get(s"${stem}_activity_categorized.csv"))
+    opts.get("--acc_cat") match {
       case Some(catFile) =>
         // pre-categorized acc: skip thresholds + categorization (:285-286)
         val cat = readCsv(spark, catFile, AccCatSchema)
-        Pipelines.timelineFromCategorized(sleep, cat)
+        writeTimeline(Pipelines.timelineFromCategorized(
+          Pipelines.sleepIntervals(measurements), cat))
       case None =>
         val accPaths = opts.get("-a").map { a =>
           val p = Paths.get(a)
@@ -404,17 +408,21 @@ object Run {
         val accWide = accPaths.map(p => readCsv(spark, p, AccWideSchema))
           .reduce(_ unionByName _)
         val out = Pipelines.categorizeFull(measurements, accWide)
-        Files.writeString(Paths.get(s"${stem}_sleep_acc_thresholds.csv"),
-          s"lower_threshold,${out.lo}\nupper_threshold,${out.hi}\n")
-        writeSingleCsv(out.categorizedAcc
-          .select("start_time", "end_time", "category")
-          .orderBy("start_time"),
-          Paths.get(s"${stem}_acc_category.csv"))
-        out.timeline
+        try {
+          val band = out.band.collect()
+          require(band.nonEmpty, "categorize: no accelerometer sample " +
+            "falls inside the net sleep intervals, so there is no resting " +
+            "band to categorize against")
+          Files.writeString(Paths.get(s"${stem}_sleep_acc_thresholds.csv"),
+            s"lower_threshold,${band(0).getAs[Double]("lo")}\n" +
+              s"upper_threshold,${band(0).getAs[Double]("hi")}\n")
+          writeSingleCsv(out.categorizedAcc
+            .select("start_time", "end_time", "category")
+            .orderBy("start_time"),
+            Paths.get(s"${stem}_acc_category.csv"))
+          writeTimeline(out.timeline)
+        } finally out.unpersist()
     }
-    writeSingleCsv(timeline
-      .select("start_time", "end_time", "category").orderBy("start_time"),
-      Paths.get(s"${stem}_activity_categorized.csv"))
   }
 
   // ---- all: the four stages chained over one tree -----------------------

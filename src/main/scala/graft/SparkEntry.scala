@@ -120,7 +120,7 @@ object SparkEntry {
     val clamped = Filters.clampKinds(ev,
       Map("click" -> (1.0, 400.0), "error" -> (5.0, 300.0)),
       kindCol = "event_type", valueCol = "value")
-    val cat = Acc.binCategorize(clamped, 5.0, 200.0,
+    val cat = Acc.binCategorize(clamped, lit(5.0), lit(200.0),
       partitionCols = Seq("event_type"), binSizeMinutes = 5,
       tsCol = "ts", valueCol = "value")
     Windows.mergeAdjacentWindows(cat.select("event_type", "start_time",
@@ -219,7 +219,7 @@ object SparkEntry {
 
     // A3+A4: tumbling-bin outlier-fraction categorize
     "q09_window_categorize" -> ((s, dir) => {
-      Acc.binCategorize(t(s, dir, "events"), 5.0, 200.0,
+      Acc.binCategorize(t(s, dir, "events"), lit(5.0), lit(200.0),
         partitionCols = Seq("event_type"), binSizeMinutes = 5,
         tsCol = "ts", valueCol = "value")
         .select(col("event_type"), col("start_time"), col("end_time"),
@@ -293,7 +293,7 @@ object SparkEntry {
 
     // W4: merge adjacent same-category windows
     "q16_merge_windows" -> ((s, dir) => {
-      val cat = Acc.binCategorize(t(s, dir, "events"), 5.0, 200.0,
+      val cat = Acc.binCategorize(t(s, dir, "events"), lit(5.0), lit(200.0),
         partitionCols = Seq("event_type"), binSizeMinutes = 5,
         tsCol = "ts", valueCol = "value")
         .select("event_type", "start_time", "end_time", "category")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -275,36 +275,44 @@ object Acc {
         sqrt(pow(col("acx"), 2) + pow(col("acy"), 2) + pow(col("acz"), 2)))
 
   /** A2: resting band = exact (2.5 %, 97.5 %) quantiles of g-force within
-    * sleep intervals (`sleep_acc_thresh`,
-    * /root/reference/activity_categorize.py:151-162). Exact `percentile`
-    * for oracle parity. */
-  def restingBand(acc: DataFrame,
-                  sleepIntervals: DataFrame): (Double, Double) = {
-    val r = Filters.pointInInterval(acc, sleepIntervals, "date_time")
-      .select(expr("percentile(g_force, array(0.025, 0.975))"))
-      .head().getSeq[Double](0)
-    require(r != null,
-      "restingBand: no acc samples fall inside the sleep intervals")
-    (r(0), r(1))
+    * sleep intervals, one band per `partitionCols` key (`sleep_acc_thresh`,
+    * activity_categorize.py:151-162, run per subject).
+    * Exact `percentile` for oracle parity (q08's shape). A sample counts
+    * toward its own key's sleep only.
+    *
+    * Returns (partitionCols..., lo, hi) as a lazy frame, so no job fires
+    * here. A key with no g-force sample inside its sleep intervals has no
+    * row; with no `partitionCols` that makes the frame empty. */
+  def restingBand(acc: DataFrame, sleepIntervals: DataFrame,
+                  partitionCols: Seq[String] = Nil): DataFrame = {
+    val part = partitionCols.map(col)
+    Filters.pointInInterval(acc, sleepIntervals, "date_time", partitionCols)
+      .groupBy(part: _*)
+      .agg(expr("percentile(g_force, array(0.025, 0.975))").as("_q"))
+      .filter(col("_q").isNotNull)
+      .select(part :+ element_at(col("_q"), 1).as("lo") :+
+        element_at(col("_q"), 2).as("hi"): _*)
   }
 
-  /** A3+A4: tumbling-bin categorize — % of samples outside [lo, hi];
-    * > 10 % high active, > 5 % low active, else rest
-    * (`acc_categorize`/`bin_categorize`,
-    * /root/reference/activity_categorize.py:164-192). Map-side partial agg;
-    * one shuffle on (partitionCols, window). */
   /** A4 building blocks, shared by the batch and streaming categorizers
-    * (`bin_categorize`, /root/reference/activity_categorize.py:184-192). */
-  def outlierFlag(value: org.apache.spark.sql.Column, lo: Double,
-                  hi: Double): org.apache.spark.sql.Column =
+    * (`bin_categorize`, activity_categorize.py:184-192).
+    * The bounds are columns: literals, or a per-row band joined in. */
+  def outlierFlag(value: Column, lo: Column, hi: Column): Column =
     when(value < lo || value > hi, 1.0).otherwise(0.0)
 
-  def categoryOf(outlierPct: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  def categoryOf(outlierPct: Column): Column =
     when(outlierPct > 10, "high active")
       .when(outlierPct > 5, "low active")
       .otherwise("rest")
 
-  def binCategorize(acc: DataFrame, lo: Double, hi: Double,
+  /** A3+A4: tumbling-bin categorize — % of samples outside [lo, hi];
+    * > 10 % high active, > 5 % low active, else rest
+    * (`acc_categorize`/`bin_categorize`,
+    * activity_categorize.py:164-192). Map-side partial agg;
+    * one shuffle on (partitionCols, window). `lo` and `hi` are evaluated
+    * per row: pass `lit(..)` for a fixed band, or the columns of a band
+    * frame joined on `partitionCols` for a per-subject one. */
+  def binCategorize(acc: DataFrame, lo: Column, hi: Column,
                     partitionCols: Seq[String] = Nil,
                     binSizeMinutes: Int = 5,
                     tsCol: String = "date_time",

@@ -108,24 +108,33 @@ object Windows {
 
   /** W4: merge adjacent same-category windows — contiguous (next.start ==
     * cur.end) AND same category
-    * (`merge_windows`, /root/reference/activity_categorize.py:194-207). */
+    * (`merge_windows`, activity_categorize.py:194-207).
+    *
+    * One change-point pass over one sort by (start_time, end_time) per
+    * `partitionCols` key, with no aggregate shuffle: a row opens a run
+    * unless it starts where the previous row ends and has its category
+    * (null categories compare equal); the run's first row takes the end
+    * of its last row. Windows are expected well-formed (start ≤ end),
+    * as binned categories are. Returns (partitionCols..., category,
+    * start_time, end_time). */
   def mergeAdjacentWindows(df: DataFrame,
                            partitionCols: Seq[String] = Nil): DataFrame = {
     val part = partitionCols.map(col)
     val ord = Window.partitionBy(part: _*)
       .orderBy(col("start_time"), col("end_time"))
-    val newRun = when(
-      lag(col("end_time"), 1).over(ord).isNull ||
-        col("category") =!= lag(col("category"), 1).over(ord) ||
-        col("start_time") =!= lag(col("end_time"), 1).over(ord),
-      1).otherwise(0)
-    df.withColumn("_new", newRun)
-      .withColumn("_run", sum(col("_new"))
-        .over(ord.rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy(part :+ col("_run") :+ col("category"): _*)
-      .agg(min(col("start_time")).as("start_time"),
-        max(col("end_time")).as("end_time"))
-      .drop("_run")
+    val prevEnd = lag(col("end_time"), 1).over(ord)
+    val opens = prevEnd.isNull || col("start_time") =!= prevEnd ||
+      !(col("category") <=> lag(col("category"), 1).over(ord))
+    // every window below shares `ord`, so the sort runs once
+    df.withColumn("_open", coalesce(opens, lit(true)))
+      .withColumn("_close",
+        coalesce(lead(col("_open"), 1).over(ord), lit(true)))
+      .filter(col("_open") || col("_close"))
+      .withColumn("_end", when(col("_close"), col("end_time"))
+        .otherwise(lead(col("end_time"), 1).over(ord)))
+      .filter(col("_open"))
+      .select(part ++ Seq(col("category"), col("start_time"),
+        col("_end").as("end_time")): _*)
   }
 
   /** W5: session id on time gap — gap > `gapSeconds` starts a new session

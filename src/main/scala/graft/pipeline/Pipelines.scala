@@ -60,7 +60,12 @@ object Pipelines {
   /** E2 — filtering_data.py (/root/reference/filtering_data.py:126-221):
     * drop flatlined time ranges (hr run-length > 20), then clamp vitals to
     * physiological ranges. A row is kept only by an include interval of its
-    * own `partitionCols` key. */
+    * own `partitionCols` key.
+    *
+    * The include intervals join through the binned point-in-interval join
+    * ([[Filters.pointInIntervalBinned]], hour bins, equi-key (partitionCols,
+    * bin)): a hash join, where the plain range join planned a nested loop
+    * of every measurement row against every include interval. */
   def filterNoise(measurements: DataFrame,
                   partitionCols: Seq[String] = Nil,
                   flatlineKind: String = "hr",
@@ -73,8 +78,8 @@ object Pipelines {
       .filter(col("include"))
       .select((partitionCols.map(col) :+ col("start_time") :+
         col("end_time")): _*)
-    val kept = Filters.pointInInterval(measurements, include, "date_time",
-      partitionCols)
+    val kept = Filters.pointInIntervalBinned(measurements, include,
+      "date_time", keys = partitionCols)
     Filters.clampKinds(kept, ranges)
   }
 
@@ -84,33 +89,58 @@ object Pipelines {
                   binSize: Int = 300): DataFrame =
     Acc.accDerived(Acc.alignAxes(acTall, partitionCols), binSize)
 
-  private def iv(df: DataFrame, partitionCols: Seq[String]): DataFrame =
-    df.select((partitionCols.map(col) :+ col("start_time") :+
-      col("end_time")): _*)
-
   /** E3 stage 1 — net sleep intervals
     * (/root/reference/activity_categorize.py:291-304): dedup-consecutive
     * cumulative counter → counter-reset intervals → merge → minus trailing
-    * 10-minute step windows. */
+    * 10-minute step windows.
+    *
+    * One filtered scan reads the `sleep_total` and `step` rows; windows over
+    * (partitionCols, kind), ordered by time, turn each kept counter row into
+    * its counter interval and each positive step row into its trailing
+    * window (step rows are never deduplicated). One 2-counter
+    * [[Intervals.sweep]] then keeps what sleep covers and no step window
+    * does. Intended mode needs no merge pass: the sweep's coverage already
+    * unions overlapping and touching counter intervals. Faithful mode first
+    * folds the counter intervals with the reference's order-dependent merge
+    * ([[CompatMode.mergeIntervals]]). Returns (partitionCols...,
+    * start_time, end_time), disjoint. */
   def sleepIntervals(measurements: DataFrame,
                      partitionCols: Seq[String] = Nil,
                      mode: CompatMode = CompatMode.Intended): DataFrame = {
-    val sleepTotal = Windows.dedupConsecutive(
-      measurements.filter(col("kind") === "sleep_total"),
-      "data", partitionCols, Seq("date_time"))
-    val prelim = Windows.counterIntervals(sleepTotal, "date_time", "data",
-      partitionCols)
-    // Faithful mode walks the reference's row order — the counter rows'
-    // time order, i.e. each interval's end timestamp (OpsSpec shows the
-    // modes agree whenever that order is already sorted by start)
-    val sleepMerged = CompatMode.mergeIntervals(iv(prelim, partitionCols),
-      partitionCols, mode,
-      seqCol = Some(unix_micros(col("end_time"))))
-    val stepIv = Windows.trailingIntervals(
-      measurements.filter(col("kind") === "step"), "date_time", "data",
-      windowMinutes = 10, keepCols = partitionCols)
-    Intervals.subtractIntervals(sleepMerged, iv(stepIv, partitionCols),
-      partitionCols)
+    val part = partitionCols.map(col)
+    val byKind = partitionCols :+ "kind"
+    val isSleep = col("kind") === "sleep_total"
+    val ord = org.apache.spark.sql.expressions.Window
+      .partitionBy(byKind.map(col): _*).orderBy(col("date_time"))
+    val prev = lag(col("data"), 1).over(ord)
+    // the counter is null on step rows, so their counter interval is too
+    val counted = Windows.counterIntervals(
+      measurements.filter(col("kind").isin("sleep_total", "step"))
+        .withColumn("_prev", prev)
+        .filter(!isSleep || col("_prev").isNull || col("data") =!= col("_prev"))
+        .withColumn("_counter", when(isSleep, col("data"))),
+      "date_time", "_counter", byKind)
+    val ivs = counted
+      .filter(isSleep || col("data") > 0)
+      .select(part ++ Seq(
+        when(isSleep, col("start_time")).otherwise(col("date_time") -
+          TimeOps.minutesInterval(lit(10))).as("start_time"),
+        col("date_time").as("end_time"), isSleep.as("_sleep")): _*)
+    val tagged = mode match {
+      case CompatMode.Intended => ivs
+      // the reference's row order is the counter rows' time order, i.e.
+      // each interval's end timestamp (OpsSpec shows the modes agree
+      // whenever that order is already sorted by start)
+      case CompatMode.Faithful =>
+        CompatMode.mergeIntervals(ivs.filter(col("_sleep")).drop("_sleep"),
+            partitionCols, mode, seqCol = Some(unix_micros(col("end_time"))))
+          .withColumn("_sleep", lit(true))
+          .unionByName(ivs.filter(!col("_sleep")))
+    }
+    val sleep = col("_sleep")
+    Intervals.sweep(tagged, partitionCols, Seq(sleep, !sleep),
+      { case Seq(s, st) => when(s > 0 && st === 0, lit(true)) })
+      .drop("label")
   }
 
   /** E3 stage 3 — the timeline algebra over net sleep and a categorized
@@ -123,7 +153,8 @@ object Pipelines {
     * `sleep` where sleep covers it and no active window does, else `rest`
     * where a rest window covers it: the reference's final sleep
     * (sleep \ active) and wake rest (rest \ final sleep). The active
-    * windows pass through unchanged. */
+    * windows pass through unchanged. The rows come in no particular
+    * order: sort them where order matters (`graft.Run` sorts its CSVs). */
   def timelineFromCategorized(sleep: DataFrame, cat: DataFrame,
                               partitionCols: Seq[String] = Nil): DataFrame = {
     val part = partitionCols.map(col)
@@ -140,31 +171,78 @@ object Pipelines {
       { case Seq(s, a, r) =>
         when(s > 0 && a === 0, "sleep").when(r > 0, "rest") })
       .withColumnRenamed("label", "category")
-    labelled
-      .union(cat.filter(active).select(cols: _*))
-      .orderBy((part :+ col("start_time")): _*)
+    labelled.union(cat.filter(active).select(cols: _*))
   }
 
   /** E3 — activity_categorize.py (/root/reference/activity_categorize.py:209-343):
-    * sleep intervals from the cumulative counter, minus step activity;
-    * resting-band acc categorization; interval algebra to the final
-    * sleep / rest / low active / high active timeline. */
-  case class CategorizeOut(lo: Double, hi: Double, categorizedAcc: DataFrame,
-                           timeline: DataFrame)
+    * the outputs of [[categorizeFull]]:
+    *  - `band`: the resting band per `partitionCols` key,
+    *    (partitionCols..., lo, hi) ([[Acc.restingBand]]);
+    *  - `categorizedAcc`: merged 5-minute acc categories,
+    *    (partitionCols..., category, start_time, end_time);
+    *  - `timeline`: the sleep / rest / low active / high active timeline
+    *    ([[timelineFromCategorized]]), in no particular order.
+    *
+    * Net sleep and the categories are persisted (lazily: the first action
+    * stores them), so every output reads them once. [[unpersist]] releases
+    * them; so does the garbage collector, once none of the three outputs
+    * is referenced any more. */
+  case class CategorizeOut(band: DataFrame, categorizedAcc: DataFrame,
+                           timeline: DataFrame)(release: Runnable) {
+    /** Releases the persisted net sleep and categories. The outputs stay
+      * usable; they recompute their inputs afterwards. */
+    def unpersist(): Unit = release.run()
+  }
 
+  private lazy val releaser = java.lang.ref.Cleaner.create()
+
+  /** Unpersists `shared`, in order, at most once: when the returned action
+    * runs, or when the garbage collector finds every one of `outputs`
+    * unreferenced. A cache entry's plans outlive its few rows of data by
+    * megabytes, so a caller that never unpersists would otherwise keep
+    * them for the life of the session. `shared` must not hold an output:
+    * the collector would then never find it unreferenced. */
+  private def releaseOnce(shared: Seq[DataFrame],
+                          outputs: Seq[DataFrame]): Runnable = {
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val left = new java.util.concurrent.atomic.AtomicInteger(outputs.size)
+    val release: Runnable = () =>
+      if (done.compareAndSet(false, true)) shared.foreach(_.unpersist())
+    outputs.foreach(o => releaser.register(o, () =>
+      if (left.decrementAndGet() == 0) release.run()))
+    release
+  }
+
+  /** E3: net sleep from the cumulative counter minus step activity
+    * ([[sleepIntervals]]); a resting band per `partitionCols` key from the
+    * acc samples inside that key's net sleep; 5-minute acc categories
+    * against the key's own band, merged where adjacent; interval algebra
+    * to the final timeline. No job fires here.
+    *
+    * The band joins the acc samples on `partitionCols` (broadcast, inner):
+    * a key with no acc sample inside its net sleep has no band, so its acc
+    * windows drop out of `categorizedAcc` and its timeline holds only its
+    * net sleep. The shared frames are released by
+    * [[CategorizeOut.unpersist]], or once the outputs are unreferenced. */
   def categorizeFull(measurements: DataFrame, accWide: DataFrame,
                      partitionCols: Seq[String] = Nil,
                      mode: CompatMode = CompatMode.Intended): CategorizeOut = {
     val part = partitionCols.map(col)
-    val sleep = sleepIntervals(measurements, partitionCols, mode)
-    val (lo, hi) = Acc.restingBand(accWide, sleep)
+    val sleep = sleepIntervals(measurements, partitionCols, mode).persist()
+    val band = Acc.restingBand(accWide, sleep, partitionCols)
     val cat = Windows.mergeAdjacentWindows(
-      Acc.binCategorize(accWide, lo, hi, partitionCols)
+      Acc.binCategorize(accWide.join(broadcast(band), partitionCols),
+          col("lo"), col("hi"), partitionCols)
         .select((part :+ col("start_time") :+ col("end_time") :+
           col("category")): _*),
-      partitionCols)
-    CategorizeOut(lo, hi, cat,
-      timelineFromCategorized(sleep, cat, partitionCols))
+      partitionCols).persist()
+    // a frame apart from the persisted one, which the release holds
+    val categorizedAcc = cat.toDF()
+    val timeline = timelineFromCategorized(sleep, cat, partitionCols)
+    // categories first: they are cached on top of net sleep, and uncaching
+    // sleep first would rebuild the categories' cache entry
+    CategorizeOut(band, categorizedAcc, timeline)(
+      releaseOnce(Seq(cat, sleep), Seq(band, categorizedAcc, timeline)))
   }
 
   /** E4 (engine extension — no reference analogue): the standard

@@ -23,7 +23,7 @@ object Streaming {
                        keyCols: Seq[String] = Nil,
                        binMinutes: Int = 5,
                        watermark: String = "10 minutes"): DataFrame = {
-    val outlier = graft.ops.Acc.outlierFlag(col(valueCol), lo, hi)
+    val outlier = graft.ops.Acc.outlierFlag(col(valueCol), lit(lo), lit(hi))
     stream
       .withWatermark(tsCol, watermark)
       .groupBy((window(col(tsCol), s"$binMinutes minutes") +:

@@ -125,7 +125,7 @@ class AccSpec extends SparkSpec {
     }
     val df = (bin(0, 0) ++ bin(5, 2) ++ bin(10, 3))
       .toDF("date_time", "g_force")
-    val got = Acc.binCategorize(df, 0.0, 2.0)
+    val got = Acc.binCategorize(df, lit(0.0), lit(2.0))
       .orderBy("start_time").select("category").as[String].collect().toSeq
     assert(got == Seq("rest", "low active", "high active"))
   }
@@ -136,8 +136,14 @@ class AccSpec extends SparkSpec {
       .toDF("date_time", "g_force")
     val sleep = Seq((ts("2024-01-01 00:00:00"), ts("2024-01-01 23:00:00")))
       .toDF("start_time", "end_time")
-    val (lo, hi) = Acc.restingBand(acc, sleep)
+    val band = Acc.restingBand(acc, sleep).collect()
+    assert(band.length == 1)
+    val (lo, hi) = (band(0).getAs[Double]("lo"), band(0).getAs[Double]("hi"))
     assert(math.abs(lo - 3.475) < 1e-9) // numpy/spark linear interpolation
     assert(math.abs(hi - 97.525) < 1e-9)
+    // no sample inside the sleep intervals: no band row
+    assert(Acc.restingBand(acc, sleep.select(
+      ($"start_time" + expr("INTERVAL 1 DAY")).as("start_time"),
+      ($"end_time" + expr("INTERVAL 1 DAY")).as("end_time"))).isEmpty)
   }
 }

@@ -202,6 +202,67 @@ class OpsSpec extends SparkSpec {
       ("active", "2024-01-01 00:20:00.0", "2024-01-01 00:25:00.0")))
   }
 
+  test("W4: the change-point merge equals the run-id groupBy form") {
+    import org.apache.spark.sql.expressions.Window
+    // the groupBy form mergeAdjacentWindows had before, composed here
+    def groupByForm(df: org.apache.spark.sql.DataFrame, part: Seq[String]) = {
+      val ord = Window.partitionBy(part.map(col): _*)
+        .orderBy(col("start_time"), col("end_time"))
+      val newRun = when(
+        lag(col("end_time"), 1).over(ord).isNull ||
+          col("category") =!= lag(col("category"), 1).over(ord) ||
+          col("start_time") =!= lag(col("end_time"), 1).over(ord),
+        1).otherwise(0)
+      df.withColumn("_new", newRun)
+        .withColumn("_run", sum(col("_new"))
+          .over(ord.rowsBetween(Window.unboundedPreceding, 0)))
+        .groupBy((part.map(col) :+ col("_run") :+ col("category")): _*)
+        .agg(min(col("start_time")).as("start_time"),
+          max(col("end_time")).as("end_time"))
+        .drop("_run")
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    def at(m: Int) = new java.sql.Timestamp(86400000L + m * 60000L)
+    def frame(ws: Seq[(String, Int, Int, String)]) =
+      ws.map { case (k, s, e, c) => (k, at(s), at(e), c) }
+        .toDF("subject", "start_time", "end_time", "category")
+    def check(ws: Seq[(String, Int, Int, String)], what: String) = {
+      val df = frame(ws)
+      assert(rows(Windows.mergeAdjacentWindows(df, Seq("subject"))) ==
+        rows(groupByForm(df, Seq("subject"))), s"$what, keyed")
+      val a = df.filter(col("subject") === "a").drop("subject")
+      assert(rows(Windows.mergeAdjacentWindows(a)) ==
+        rows(groupByForm(a, Nil)), s"$what, unkeyed")
+    }
+    // a gap between two rest windows, a touching rest run, single-row runs
+    // of each category, and key b interleaved at the same instants
+    val fixed = Seq(("a", 0, 5, "rest"), ("a", 10, 15, "rest"),
+      ("a", 15, 20, "rest"), ("a", 20, 25, "rest"), ("a", 25, 30, "low"),
+      ("a", 30, 35, "high"), ("a", 35, 40, "rest"), ("a", 45, 50, "high"),
+      ("b", 0, 5, "rest"), ("b", 5, 10, "rest"), ("b", 10, 15, "high"))
+    check(fixed, "fixed")
+    val merged = Windows.mergeAdjacentWindows(frame(fixed), Seq("subject"))
+      .filter(col("subject") === "a")
+      .orderBy("start_time").collect()
+      .map(r => (r.getString(1), r.getTimestamp(2), r.getTimestamp(3))).toSeq
+    assert(merged == Seq(("rest", at(0), at(5)), ("rest", at(10), at(25)),
+      ("low", at(25), at(30)), ("high", at(30), at(35)),
+      ("rest", at(35), at(40)), ("high", at(45), at(50))))
+    // random 5-minute bins with gaps, as binCategorize emits them
+    val rnd = new scala.util.Random(16)
+    val cats = Seq("rest", "low active", "high active")
+    for (round <- 0 until 4) {
+      val ws = Seq("a", "b").flatMap { k =>
+        (0 until 40).filter(_ => rnd.nextInt(5) > 0).map { i =>
+          (k, 5 * i, 5 * i + 5,
+            cats(if (rnd.nextInt(3) == 0) rnd.nextInt(3) else 0))
+        }
+      }
+      check(ws, s"random round $round")
+    }
+  }
+
   test("W5: sessionize splits on gap > threshold") {
     val df = Seq(
       ts("2024-01-01 00:00:00.0"), ts("2024-01-01 00:00:00.5"),

@@ -164,7 +164,9 @@ class PipelineSpec extends SparkSpec {
     val acc = accFixture()
     val out = Pipelines.categorizeFull(m, acc)
     val timeline = out.timeline
-    assert(out.lo <= out.hi)
+    val band = out.band.collect()
+    assert(band.length == 1)
+    assert(band(0).getAs[Double]("lo") <= band(0).getAs[Double]("hi"))
     val cats = timeline.select("category").distinct().as[String]
       .collect().toSet
     assert(cats.contains("sleep"))
@@ -182,28 +184,40 @@ class PipelineSpec extends SparkSpec {
     // assumptions (time-ordered, well-formed pairs, 5-minute bins), which
     // is exactly when the quirks are invisible. The dial only diverges on
     // inputs that violate those assumptions (OpsSpec matrix covers that).
-    val faithful = Pipelines.categorizeFull(m, acc,
-      mode = graft.ops.CompatMode.Faithful).timeline
+    val faithfulOut = Pipelines.categorizeFull(m, acc,
+      mode = graft.ops.CompatMode.Faithful)
     val a = timeline.select("category", "start_time", "end_time").collect()
       .map(_.toString).sorted.toSeq
-    val b = faithful.select("category", "start_time", "end_time").collect()
-      .map(_.toString).sorted.toSeq
+    val b = faithfulOut.timeline.select("category", "start_time", "end_time")
+      .collect().map(_.toString).sorted.toSeq
     assert(a == b, "Faithful diverged from Intended on assumption-clean input")
+    out.unpersist()
+    faithfulOut.unpersist()
   }
 
   test("E3 plan: the timeline plans at most 10 exchanges") {
     val dir = writeFixture()
     val m = Pipelines.reformat(spark, dir.toString).measurements
-    val plan = Pipelines.categorizeFull(m, accFixture()).timeline
-      .queryExecution.executedPlan
-    val initial = plan match {
+    val out = Pipelines.categorizeFull(m, accFixture())
+    val plan = out.timeline.queryExecution.executedPlan
+    out.unpersist()
+    import org.apache.spark.sql.execution.SparkPlan
+    def initial(p: SparkPlan): SparkPlan = p match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         a.initialPlan
       case p => p
     }
-    val exchanges = initial.collect {
-      case e: org.apache.spark.sql.execution.exchange.Exchange => e }
-    assert(exchanges.size <= 10, initial.treeString)
+    // the persisted net sleep and categories count once each, with the
+    // plans they hold
+    val seen = scala.collection.mutable.Set.empty[AnyRef]
+    def exchanges(p: SparkPlan): Int = initial(p).collect {
+      case _: org.apache.spark.sql.execution.exchange.Exchange => 1
+      case c: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+          if seen.add(c.relation.cacheBuilder) =>
+        exchanges(c.relation.cacheBuilder.cachedPlan)
+    }.sum
+    val n = exchanges(plan)
+    assert(n <= 10, s"$n exchanges in ${initial(plan).treeString}")
   }
 
   test("E2 filter: each subject keeps only its own include intervals") {
@@ -227,6 +241,247 @@ class PipelineSpec extends SparkSpec {
     val a = Pipelines.filterNoise(m, Seq("subject")).filter($"subject" === "A")
     assert(a.filter($"date_time" < at(30)).count() == 0)
     assert(a.count() == 11) // 10 varied hr rows and the spo2 row at 35
+  }
+
+  /** Measurements of one subject whose clock runs `shiftMin` minutes
+    * after the others': a counter night from 02:00 to 07:00 (the 07:30
+    * repeat is deduplicated), a step inside it and two equal steps at
+    * 09:00 and 09:10. */
+  private def subjectMeasurements(subject: String, shiftMin: Int) = {
+    def at(h: Int, m: Int) =
+      new java.sql.Timestamp(Day + (h * 60L + m + shiftMin) * 60000L)
+    Seq((at(1, 0), "sleep_total", 0.0), (at(7, 0), "sleep_total", 300.0),
+      (at(7, 30), "sleep_total", 300.0), (at(4, 0), "step", 30.0),
+      (at(9, 0), "step", 500.0), (at(9, 10), "step", 500.0),
+      (at(9, 5), "hr", 70.0))
+      .map { case (t, k, v) => (subject, t, k, v) }
+  }
+
+  /** Wide acc of one subject every 20 s over [fromH, 12:00), g-force
+    * around `scale`, three times `scale` from 09:00 to 09:30. */
+  private def subjectAcc(subject: String, shiftMin: Int, scale: Double,
+                         fromH: Int = 0) =
+    (fromH * 180 until 12 * 180).map { k =>
+      val t = new java.sql.Timestamp(Day + shiftMin * 60000L + k * 20000L)
+      val active = k >= 9 * 180 && k < 9 * 180 + 90
+      val g = scale * (if (active) 3.0 else 1.0 + (k * 37 % 101) / 1000.0)
+      (subject, t, g)
+    }
+
+  private def cohort(subjects: Seq[(String, Int, Double, Int)]) = {
+    val m = subjects.flatMap { case (s, sh, _, _) =>
+      subjectMeasurements(s, sh) }
+      .toDF("subject", "date_time", "kind", "data")
+    val acc = subjects.flatMap { case (s, sh, scale, from) =>
+      subjectAcc(s, sh, scale, from) }
+      .toDF("subject", "date_time", "g_force")
+    (m, acc)
+  }
+
+  test("E3 categorize: k subjects together equal each subject alone") {
+    // different g-force scales and overlapping clocks; D wears the watch
+    // only from 08:00, after its net sleep
+    val subjects = Seq(("A", 0, 1.0, 0), ("B", 7, 2.0, 0), ("C", 13, 3.0, 0),
+      ("D", 4, 1.0, 8))
+    val (m, acc) = cohort(subjects)
+    val key = Seq("subject")
+    def outputs(o: Pipelines.CategorizeOut) =
+      Seq(o.band, o.categorizedAcc, o.timeline).map(rowsOf)
+    val together = Pipelines.categorizeFull(m, acc, key)
+    val got = outputs(together)
+    val alone = subjects.map { case (s, _, _, _) =>
+      val o = Pipelines.categorizeFull(m.filter($"subject" === s),
+        acc.filter($"subject" === s), key)
+      try outputs(o) finally o.unpersist()
+    }
+    Seq("band", "categorizedAcc", "timeline").zipWithIndex.foreach {
+      case (name, i) =>
+        assert(got(i) == alone.flatMap(_(i)).sorted, name)
+    }
+    // each subject's own band: a pooled band would read one (lo, hi)
+    val bands = together.band.as[(String, Double, Double)].collect()
+      .sortBy(_._1).toSeq
+    assert(bands.map(_._1) == Seq("A", "B", "C"))
+    bands.foreach { case (s, lo, hi) =>
+      val scale = subjects.find(_._1 == s).get._3
+      assert(lo > scale && hi < scale * 1.1, s"$s: ($lo, $hi)")
+    }
+    // D has no acc sample inside its net sleep: no band, so no acc
+    // windows, and its timeline is its net sleep alone
+    assert(together.categorizedAcc.filter($"subject" === "D").isEmpty)
+    val dTimeline = together.timeline.filter($"subject" === "D")
+    assert(dTimeline.select("category").distinct().as[String].collect()
+      .toSeq == Seq("sleep"))
+    assert(rowsOf(dTimeline.drop("category")) == rowsOf(
+      Pipelines.sleepIntervals(m.filter($"subject" === "D"), key)))
+    assert(together.categorizedAcc.filter($"category" === "high active")
+      .select("subject").distinct().count() == 3)
+    together.unpersist()
+  }
+
+  test("E3 net sleep: one scan equals the merge-then-subtract formula") {
+    import graft.ops.{CompatMode, Intervals, Windows}
+    def at(m: Int) = new java.sql.Timestamp(Day + m * 60000L)
+    // the formula before the one-scan form, composed here
+    def formula(m: DataFrame, part: Seq[String], mode: CompatMode) = {
+      def iv(df: DataFrame) =
+        df.select((part :+ "start_time" :+ "end_time").map(col): _*)
+      val counter = Windows.dedupConsecutive(
+        m.filter($"kind" === "sleep_total"), "data", part, Seq("date_time"))
+      val prelim = Windows.counterIntervals(counter, "date_time", "data",
+        part)
+      val merged = CompatMode.mergeIntervals(iv(prelim), part, mode,
+        seqCol = Some(unix_micros($"end_time")))
+      val steps = Windows.trailingIntervals(m.filter($"kind" === "step"),
+        "date_time", "data", windowMinutes = 10, keepCols = part)
+      Intervals.subtractIntervals(merged, iv(steps), part)
+    }
+    def check(rows: Seq[(String, Int, String, Double)], what: String) = {
+      val m = rows.map { case (s, t, k, v) => (s, at(t), k, v) }
+        .toDF("subject", "date_time", "kind", "data")
+      for (mode <- Seq(CompatMode.Intended, CompatMode.Faithful)) {
+        assert(rowsOf(Pipelines.sleepIntervals(m, Seq("subject"), mode)) ==
+          rowsOf(formula(m, Seq("subject"), mode)), s"$what, keyed, $mode")
+        val a = m.filter($"subject" === "a").drop("subject")
+        assert(rowsOf(Pipelines.sleepIntervals(a, Nil, mode)) ==
+          rowsOf(formula(a, Nil, mode)), s"$what, unkeyed, $mode")
+      }
+      m
+    }
+    // counter intervals: degenerate [60, 60] (the first reading), nested
+    // [110, 120] inside [-70, 180], and [180, 240] touching it; a step
+    // window straddling the night's end and two equal steps 5 and 15
+    // minutes apart, neither deduplicated
+    val night = Seq(("a", 60, "sleep_total", 0.0),
+      ("a", 120, "sleep_total", 10.0), ("a", 180, "sleep_total", 260.0),
+      ("a", 240, "sleep_total", 320.0), ("a", 250, "sleep_total", 320.0),
+      ("a", 245, "step", 12.0), ("a", 100, "step", 40.0),
+      ("a", 105, "step", 40.0), ("a", 120, "step", 40.0),
+      ("a", 150, "step", 0.0),
+      ("b", 30, "sleep_total", 100.0), ("b", 60, "sleep_total", 100.0),
+      ("b", 90, "sleep_total", 130.0), ("b", 95, "step", 5.0))
+    val m = check(night, "edges")
+    val a = rowsOf(Pipelines.sleepIntervals(
+      m.filter($"subject" === "a"), Seq("subject")))
+    assert(a == Seq(
+      Seq("a", at(-70), at(90)), Seq("a", at(105), at(110)),
+      Seq("a", at(120), at(235))).map(_.mkString("[", ",", "]")))
+    // random counters and steps, with resets after 12 h gaps
+    val rnd = new scala.util.Random(606)
+    for (round <- 0 until 4) {
+      val rows = Seq("a", "b").flatMap { s =>
+        var t = 0; var c = 0.0
+        Seq.fill(12) {
+          t += 5 * (1 + rnd.nextInt(if (rnd.nextInt(10) == 0) 200 else 12))
+          c = if (rnd.nextInt(5) == 0) 5.0 * rnd.nextInt(10)
+            else c + 5 * rnd.nextInt(4)
+          (s, t, "sleep_total", c)
+        } ++ Seq.fill(6)((s, 5 * rnd.nextInt(200), "step",
+          5.0 * rnd.nextInt(3)))
+      }
+      check(rows, s"random round $round")
+    }
+  }
+
+  test("E2 filter: the binned join keeps what the nested-loop join kept") {
+    import graft.ops.Filters
+    def at(m: Int, s: Int = 0) =
+      new java.sql.Timestamp(Day + m * 60000L + s * 1000L)
+    // the nested-loop form the filter used before, composed here
+    def nestedLoop(m: DataFrame, part: Seq[String]) = {
+      val include = Filters.flatlineIntervals(
+          m.filter($"kind" === "hr"), "date_time", "data", part)
+        .filter($"include")
+        .select((part :+ "start_time" :+ "end_time").map(col): _*)
+      Filters.clampKinds(
+        Filters.pointInInterval(m, include, "date_time", part),
+        Filters.VitalRanges)
+    }
+    // A: an hr island of 15 equal readings from 00:52 to 01:06 crosses the
+    // hour; spo2 rows on both of its endpoints, inside it, a second past
+    // its end and on a singleton island; a 25-reading flatline drops.
+    // B: varied hr at the same instants, so B's islands cover A's rows
+    val rows =
+      (52 until 67).map(i => ("A", at(i), "hr", 70.0)) ++
+        (67 until 80).map(i => ("A", at(i), "hr", 60.0 + i % 7)) ++
+        (100 until 125).map(i => ("A", at(i), "hr", 65.0)) ++
+        Seq(("A", at(52), "spo2", 97.0), ("A", at(66), "spo2", 96.0),
+          ("A", at(60, 30), "spo2", 95.0), ("A", at(66, 1), "spo2", 94.0),
+          ("A", at(70), "spo2", 93.0), ("A", at(110), "spo2", 92.0),
+          ("A", at(70), "bp_sys", 70.0)) ++
+        (50 until 130).map(i => ("B", at(i), "hr", 60.0 + i % 13)) ++
+        Seq(("B", at(66, 1), "spo2", 98.0), ("B", at(110), "spo2", 91.0))
+    val m = rows.toDF("subject", "date_time", "kind", "data")
+    assert(rowsOf(Pipelines.filterNoise(m, Seq("subject"))) ==
+      rowsOf(nestedLoop(m, Seq("subject"))))
+    val a = m.filter($"subject" === "A").drop("subject")
+    val keptA = Pipelines.filterNoise(a)
+    assert(rowsOf(keptA) == rowsOf(nestedLoop(a, Nil)))
+    assert(keptA.filter($"kind" === "spo2").select("data").as[Double]
+      .collect().sorted.toSeq == Seq(93.0, 95.0, 96.0, 97.0))
+  }
+
+  test("E2 filter: the executed plan joins without a nested loop") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    val m = Pipelines.reformat(spark, writeFixture().toString).measurements
+    for (part <- Seq(Nil, Seq("jname"))) {
+      val filtered = Pipelines.filterNoise(m, part)
+      filtered.collect()
+      val plan = filtered.queryExecution.executedPlan
+      val helper = new AdaptiveSparkPlanHelper {}
+      assert(helper.collect(plan) {
+        case j: BroadcastNestedLoopJoinExec => j }.isEmpty, plan.treeString)
+    }
+  }
+
+  test("E3 categorize: no job while the frames are built, the outputs " +
+    "share one net sleep, and unpersist releases it") {
+    import org.apache.spark.scheduler.SparkListenerJobStart
+    val sc = spark.sparkContext
+    val (m, acc) = cohort(Seq(("A", 0, 1.0, 0)))
+    // earlier suites may leave cached frames behind
+    spark.catalog.clearCache()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    Bus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = Pipelines.categorizeFull(m, acc)
+      Bus.drain(sc)
+      assert(jobs.get == 0, "jobs fired while the frames were built")
+      out.categorizedAcc.collect()
+      out.timeline.collect()
+      Bus.drain(sc)
+      // measured when the net sleep and categories became shared: 11
+      assert(jobs.get <= 11, s"${jobs.get} jobs")
+      assert(!spark.sharedState.cacheManager.isEmpty)
+      out.unpersist()
+      assert(spark.sharedState.cacheManager.isEmpty)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("E3 categorize: the shared frames go once the outputs are " +
+    "unreferenced") {
+    val (m, acc) = cohort(Seq(("A", 0, 1.0, 0)))
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    // the outputs live only inside this call
+    def writeAndDrop(): Unit = {
+      val out = Pipelines.categorizeFull(m, acc)
+      out.categorizedAcc.collect()
+      out.timeline.collect()
+      assert(!cache.isEmpty)
+    }
+    writeAndDrop()
+    var polls = 0
+    while (!cache.isEmpty && polls < 100) {
+      System.gc(); Thread.sleep(100); polls += 1
+    }
+    assert(cache.isEmpty, s"still cached after $polls collections")
   }
 
   test("E4 curate: gate, exact dedup, near-dup, split, decontamination") {

@@ -153,6 +153,26 @@ class RunSpec extends SparkSpec {
     assert(timeline.exists(_.endsWith("high active")))
   }
 
+  test("categorize CLI: no acc sample inside net sleep fails clearly") {
+    val (root, _) = writeFixture()
+    val computed = writeComputedCsv(root)
+    // acc only at noon; net sleep is 06:00-08:00
+    val acc = root.resolve("0_noon_ac_reformatted.csv")
+    Files.writeString(acc, ("date_time,acx,acy,acz,seconds,bin,g_force" +:
+      (0 until 12).map { i =>
+        val t = new java.sql.Timestamp(Day + 12 * 3600000L + i * 60000L)
+        s"$t,0.0,0.0,1.0,${43200 + i * 60}.0,144,1.0"
+      }).mkString("\n"))
+    val stem = root.resolve("subj25").toString
+    val e = intercept[IllegalArgumentException] {
+      Run.main(Array("categorize", "-f", computed.toString,
+        "-a", acc.toString, "-s", stem))
+    }
+    assert(e.getMessage.contains("no resting band"), e.getMessage)
+    assert(!Files.exists(
+      java.nio.file.Paths.get(s"${stem}_sleep_acc_thresholds.csv")))
+  }
+
   test("categorize CLI --acc_cat: reuses stored categories, skips thresholds") {
     val (root, _) = writeFixture()
     val computed = writeComputedCsv(root)

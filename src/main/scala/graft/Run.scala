@@ -100,7 +100,10 @@ object Run {
       |  train-tokenizer -d <docs parquet> -s <tokenizer.json>
       |             [--family metaspace|byte_level|whitespace|unigram]
       |             [--merges <n>] [--vocab-size <n>] [--rounds <n>]
-      |             [--metaspace] [--byte-fallback]""".stripMargin
+      |             [--metaspace] [--byte-fallback]
+      |Repeated or large runs: start the JVM with
+      |  -Dspark.sql.codegen.cache.maxEntries=2000 (default 100; README,
+      |  "Codegen cache sizing") so generated code is not compiled again.""".stripMargin
 
   /** getopt-lite: `-x val` / `--long val` for value opts, bare flags for
     * booleans (the reference's flag set). */

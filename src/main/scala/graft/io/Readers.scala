@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 import graft.model.Schemas
 
 /** Sources (SURVEY.md §2.1, S1-S4).
@@ -19,24 +20,55 @@ object Readers {
 
   /** S1+S2: multi-file JSON scan, each row tagged with `jname` = timestamp
     * token from its file name (empty when absent — quirk Q10,
-    * raw_data_reformat.py:23-25). `data` is kept as a raw JSON string; the
+    * raw_data_reformat.py:23-25). `data` is kept as a JSON string; the
     * tagged-union payload is parsed per-kind downstream.
+    *
+    * One projection: a whole-text scan yields one row per `*.json` file
+    * under `dir` (nested directories included), `jname` is taken once per
+    * file, and `from_json` + `inline` turn the file's array into records.
+    * Not the multiLine JSON source: with `data` typed as a string, that
+    * source copies each non-string value's exact text back out of the file
+    * with one positioned read per value, and on a local file system every
+    * such read reopens the file (~16k reopens per subject-day). `from_json`
+    * parses text already in memory, so each file is read once.
+    *
+    * What the JSON source did, kept:
+    *   - a file holding one object reads as one record; an empty or blank
+    *     file and `[]` read as none;
+    *   - any other file that is not an array of objects (not JSON,
+    *     truncated, a `null` element) reads as one all-null record;
+    *   - a field of the wrong type reads as null within its record.
+    * What differs:
+    *   - files are read as UTF-8 only; a leading byte-order mark is
+    *     dropped;
+    *   - the text of a non-string `data` value comes back as Jackson
+    *     prints it, not as written: `[71.00, 1e2]` reads
+    *     `[71.0,100.0]`. It parses to the same values downstream.
     */
-  def loadRawJson(spark: SparkSession, dir: String,
-                  recursive: Boolean = true,
-                  multiLine: Boolean = true): DataFrame =
+  def loadRawJson(spark: SparkSession, dir: String): DataFrame = {
+    val text = ltrim(col("value"), "\uFEFF")
+    val parsed = col("parsed")
     spark.read
-      .schema(Schemas.rawJson)
+      .option("wholetext", "true")
       .option("pathGlobFilter", "*.json")
-      .option("recursiveFileLookup", recursive.toString)
-      // watch uploads are JSON-array files (one array per upload)
-      .option("multiLine", multiLine.toString)
-      .option("primitivesAsString", "true")
-      .json(dir)
-      // input_file_name() is URL-encoded (space → %20): decode before the
-      // timestamp-pattern match
-      .withColumn("jname",
-        regexp_extract(url_decode(input_file_name()), JnamePattern, 0))
+      .option("recursiveFileLookup", "true")
+      .text(dir)
+      .select(
+        from_json(text, ArrayType(Schemas.rawJson)).as("parsed"),
+        text.rlike("[^ \\t\\r\\n]").as("non_blank"),
+        // input_file_name() is URL-encoded (space → %20): decode before the
+        // timestamp-pattern match
+        regexp_extract(url_decode(input_file_name()), JnamePattern, 0)
+          .as("jname"))
+      // as from the JSON source: a non-blank file that is neither an object
+      // nor an array of objects reads as one all-null record
+      .select(
+        when(parsed.isNull && col("non_blank") || exists(parsed, _.isNull),
+          array(lit(null).cast(Schemas.rawJson))).otherwise(parsed)
+          .as("records"),
+        col("jname"))
+      .select(inline(col("records")), col("jname"))
+  }
 
   /** S4: typed CSV scan — schema is the column pruning + casts the reference
     * does by hand (/root/reference/activity_categorize.py:50-66). */

@@ -33,6 +33,13 @@ object Pipelines {
     * the blocks are released once the frames are unreferenced, so callers
     * have nothing to unpersist.
     *
+    * The parse itself ([[Readers.loadRawJson]]) reads each file once as
+    * whole UTF-8 text and parses it in memory; non-string payload text
+    * arrives Jackson-printed (`71.00` as `71.0`), which the normalizers
+    * parse to the same doubles. The checkpoint stays although the parse is
+    * now cheap: without it the three outputs each parse again, and a
+    * prototype without it measured no clear gain.
+    *
     * @param refEpochMs optional reference-clock instant (the Excel min time
     *                   in the reference) from which the offset is derived
     * @param offsetMs   explicit offset (the reference's `-t`); wins over

@@ -86,37 +86,54 @@ class PipelineSpec extends SparkSpec {
   }
 
   /** Runs `body` and returns how many of the Spark stages it ran read
-    * files (a `FileScanRDD` in the stage's lineage). */
-  private def fileScanStages(body: => Unit): Int = {
+    * files (a `FileScanRDD` in the stage's lineage) and how many bytes
+    * those stages read. */
+  private def fileScans(body: => Unit): (Int, Long) = {
     val sc = spark.sparkContext
-    val scans = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val scans = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val listener = new SparkListener {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
-          scans.add(e.stageInfo.stageId)
+          scans.add(e.stageInfo.taskMetrics.inputMetrics.bytesRead)
     }
     Bus.drain(sc)
     sc.addSparkListener(listener)
     try { body; Bus.drain(sc) } finally sc.removeSparkListener(listener)
-    scans.size
+    (scans.size, scans.stream().mapToLong(_.longValue).sum)
   }
-
-  private def rowsOf(df: DataFrame): Seq[String] =
-    df.collect().map(_.toString).sorted.toSeq
 
   test("E1 reformat: one parse of the raw JSON feeds all three outputs") {
     val dir = writeFixture().toString
-    val explicit = fileScanStages {
+    val (explicit, _) = fileScans {
       val out = Pipelines.reformat(spark, dir, offsetMs = Some(900000L))
       Seq(out.measurements, out.ppg, out.ac).foreach(_.collect())
     }
     assert(explicit == 1)
     // the derived offset's min-agg job is the parse the writes reuse
-    val derived = fileScanStages {
+    val (derived, _) = fileScans {
       val out = Pipelines.reformat(spark, dir, refEpochMs = Some(Day))
       Seq(out.measurements, out.ppg, out.ac).foreach(_.collect())
     }
     assert(derived == 1)
+  }
+
+  test("E1 reformat: the parse reads each byte of the raw JSON once") {
+    val dir = Files.createTempDirectory("graft_raw_json_bytes")
+    // many non-string payloads: a JSON-source scan re-read each one's text
+    val files = (0 until 3).map { k =>
+      Files.writeString(dir.resolve(s"watch 2024-01-0${k + 1} 08-00-00.json"),
+        (0 until 400).map(i => s"""{"time": ${Day + (k * 400 + i) * 1000L},
+          | "kind": "hr", "data": [${60 + i % 40}.00]}""".stripMargin)
+          .mkString("[", ",\n", "]"))
+    }
+    val fileBytes = files.map(Files.size(_)).sum
+    val (scans, read) = fileScans {
+      val out = Pipelines.reformat(spark, dir.toString)
+      Seq(out.measurements, out.ppg, out.ac).foreach(_.collect())
+    }
+    assert(scans == 1)
+    assert(read > 0 && read <= fileBytes,
+      s"$read bytes read from $fileBytes bytes of files")
   }
 
   test("E1 reformat equals the uncheckpointed composition") {

@@ -23,6 +23,10 @@ abstract class SparkSpec extends AnyFunSuite {
 
   def ts(s: String): java.sql.Timestamp = java.sql.Timestamp.valueOf(s)
 
+  /** Collect every row as its string form, sorted. */
+  def rowsOf(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
   /** Collect (start_time, end_time) pairs sorted. */
   def intervalsOf(df: DataFrame): Seq[(String, String)] =
     df.select("start_time", "end_time").collect()

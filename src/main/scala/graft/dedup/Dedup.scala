@@ -599,24 +599,28 @@ object Dedup {
   /** End-to-end scalable near-dup clustering: MinHash-LSH candidates →
     * exact Jaccard verification on candidates only → connected components.
     * Every stage's volume is bounded by true near-dup density, never by
-    * corpus size squared. */
+    * corpus size squared. The candidate pairs are persisted while the
+    * components are found: the shingle cache's id set and the verify join
+    * both read them, so the signatures and the banding run once. */
   def nearDupClusters(docs: DataFrame, idCol: String = "doc_id",
                       textCol: String = "text", shingleN: Int = 3,
                       minJaccard: Double = 0.5, numHashes: Int = 64,
                       bands: Int = 16,
                       portable: Boolean = false): DataFrame = {
     val cand = minhashCandidates(docs, idCol, textCol, shingleN, numHashes,
-      bands, portable)
+      bands, portable).persist()
     val (jac, shCache) =
       jaccardForPairsWithHandle(docs, cand, idCol, textCol, shingleN)
     val verified = jac.filter(col("jaccard") >= minJaccard)
     // connectedComponents materializes its edge set before returning (the
     // gate count + either the driver collect or the checkpointed BSP
-    // labels), so the shingle cache has served every consumer by here
+    // labels), so both caches have served every consumer by here. The
+    // shingle cache is built on the candidates: release it first
     val out = connectedComponents(docs.select(col(idCol).as("id")),
         verified, pairsVerified = true)
       .select(col("id").as(idCol), col("cluster_id"))
     shCache.unpersist(false)
+    cand.unpersist(false)
     out
   }
 
@@ -1073,12 +1077,18 @@ object Dedup {
         .select("u", "v") // a USING join moves its key to column 0
         .distinct()).cache()
     val idType = nodeIds.schema("id").dataType
+    val spark = nodes.sparkSession
+    def named[T](phase: String)(body: => T): T =
+      graft.Jobs.withJobDescription(spark, "connectedComponents", phase)(body)
     // one pass gives both gate inputs: edge count and average id width
     // (digit count for numerics — a fair proxy for their boxed size)
-    val gateRow = restricted.agg(
-      count(lit(1)),
-      avg(length(col("u").cast("string")) + length(col("v").cast("string"))))
-      .head()
+    val gateRow = named("edge gate") {
+      restricted.agg(
+        count(lit(1)),
+        avg(length(col("u").cast("string")) +
+          length(col("v").cast("string"))))
+        .head()
+    }
     val edgeCount = gateRow.getLong(0)
     val avgIdWidth = if (gateRow.isNullAt(1)) 0.0 else gateRow.getDouble(1)
     // ~112 bytes/edge of driver overhead beyond the ids themselves:
@@ -1088,7 +1098,9 @@ object Dedup {
       idOrdering(idType).isDefined && edgeCount <= driverMaxEdges &&
       estDriverBytes <= driverMaxBytes
     if (smallEnough) {
-      val out = driverUnionFind(nodeIds, restricted, idType)
+      val out = named("driver union-find") {
+        driverUnionFind(nodeIds, restricted, idType)
+      }
       restricted.unpersist(false)
       return out
     }
@@ -1100,20 +1112,24 @@ object Dedup {
       edges.join(labels, edges("v") === labels("id"))
         .groupBy("u").agg(min("label").as("label"))
         .withColumnRenamed("u", "id")
-    var labels = nodes.select(col("id"), col("id").as("label"))
-      .localCheckpoint()
+    var labels = named("label init") {
+      nodes.select(col("id"), col("id").as("label")).localCheckpoint()
+    }
     // Σlabel as decimal — immune to long overflow at curation-scale id
     // ranges; strictly decreases until the fixed point. Empty input sums
     // to SQL NULL → normalize to 0 so the convergence compare is total.
-    def labelSum(df: DataFrame): java.math.BigDecimal =
+    def labelSum(df: DataFrame): java.math.BigDecimal = named("label sum") {
       Option(df.agg(sum(col("label").cast("decimal(38,0)"))).head()
         .getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
+    }
     var prevSum = labelSum(labels)
     var converged = false
     var round = 0
     while (!converged && round < maxIter) {
-      labels = Iterator.iterate(labels)(step).drop(stepsPerRound).next()
-        .localCheckpoint()
+      labels = named("label round") {
+        Iterator.iterate(labels)(step).drop(stepsPerRound).next()
+          .localCheckpoint()
+      }
       val s = labelSum(labels)
       converged = s.compareTo(prevSum) == 0
       prevSum = s

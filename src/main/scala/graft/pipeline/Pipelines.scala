@@ -252,51 +252,6 @@ object Pipelines {
       releaseOnce(Seq(cat, sleep), Seq(band, categorizedAcc, timeline)))
   }
 
-  /** E4 (engine extension — no reference analogue): the standard
-    * LLM-training-data curation sweep over a document corpus, composed
-    * from the dedup/text operators:
-    *
-    *  1. gate       — non-null text, quality ≥ `minQuality`, language "en"
-    *                  (map-only column expressions); optionally a
-    *                  byte-level repetition floor: drop docs whose
-    *                  deflate ratio falls below `minCompressionRatio`
-    *                  (looping spam compresses to almost nothing while
-    *                  passing character-class quality); with
-    *                  `blockWords` drop docs whose unsafe-word fraction
-    *                  exceeds `maxBlocklistFraction` (q149's gate); with
-    *                  `allowLicenses` keep only docs whose detected
-    *                  license class is allowed (q150's tagger); with
-    *                  `dropDamaged` drop docs carrying U+FFFD
-    *                  replacement chars or stray C0 controls (q157's
-    *                  encoding-damage gate — runs first among the
-    *                  optional predicates since transcoding damage
-    *                  poisons every downstream text rule)
-    *  2. exact      — one survivor per normalized fingerprint
-    *  3. near-dup   — [[graft.dedup.Dedup.nearDupClusters]] (LSH
-    *                  candidates → exact verify → components), keep each
-    *                  component's representative; with `maxPerDomain`
-    *                  then a FineWeb-style per-registrable-domain cap
-    *                  over `urlCol` ([[graft.text.UrlOps.capPerDomain]]);
-    *                  with `tokenBudget` then best-quality-first
-    *                  selection until the budget fills
-    *                  ([[graft.text.TextOps.selectUnderTokenBudget]])
-    *  4. split      — deterministic md5 train/val/test
-    *  5. decontam   — drop training docs sharing any word
-    *                  `decontamN`-gram with the held-out test split;
-    *                  with `fuzzyDecontaminate` ALSO drop training docs
-    *                  that are MinHash near-dups (exact-verified Jaccard
-    *                  ≥ `fuzzyMinJaccard`) of any test doc — the
-    *                  paraphrase-tolerant pass exact n-grams miss
-    *
-    * Returns the curated corpus with the `split` column. Every stage's
-    * shuffle posture is the operator's own (see SURVEY.md §9); the gate
-    * runs first so all downstream shuffles move only surviving docs. */
-  /** WARC → documents-shaped ingest: crawl records become (doc_id, text,
-    * lang, source, n_chars) rows ready for [[curate]]. `conversion`
-    * records (Common Crawl's pre-extracted text) pass through bare;
-    * `response` records get the HTTP envelope stripped. doc_id is the
-    * xxhash64 of the WARC record id (stable across re-reads), source is
-    * the target host, lang the engine's heuristic — all map-only. */
   /** Shape charset-DECODED WARC records ([[graft.io.Warc
     * .recordsDecoded]] output) into the documents contract — shared by
     * the batch [[ingestWarc]] (`decodeCharset = true`) and the
@@ -330,6 +285,12 @@ object Pipelines {
         "decode_ok")
   }
 
+  /** WARC → documents-shaped ingest: crawl records become (doc_id, text,
+    * lang, source, n_chars) rows ready for [[curate]]. `conversion`
+    * records (Common Crawl's pre-extracted text) pass through bare;
+    * `response` records get the HTTP envelope stripped. doc_id is the
+    * xxhash64 of the WARC record id (stable across re-reads), source is
+    * the target host, lang the engine's heuristic — all map-only. */
   def ingestWarc(spark: SparkSession, path: String,
                  types: Seq[String] = Seq("conversion", "response"),
                  extractHtml: Boolean = false,
@@ -412,6 +373,56 @@ object Pipelines {
       .select("doc_id", "text", "lang", "source", "n_chars")
   }
 
+  /** E4 (engine extension — no reference analogue): the standard
+    * LLM-training-data curation sweep over a document corpus, composed
+    * from the dedup/text operators:
+    *
+    *  1. gate       — non-null text, quality ≥ `minQuality`, language "en"
+    *                  (map-only column expressions); optionally a
+    *                  byte-level repetition floor: drop docs whose
+    *                  deflate ratio falls below `minCompressionRatio`
+    *                  (looping spam compresses to almost nothing while
+    *                  passing character-class quality); with
+    *                  `blockWords` drop docs whose unsafe-word fraction
+    *                  exceeds `maxBlocklistFraction` (q149's gate); with
+    *                  `allowLicenses` keep only docs whose detected
+    *                  license class is allowed (q150's tagger); with
+    *                  `dropDamaged` drop docs carrying U+FFFD
+    *                  replacement chars or stray C0 controls (q157's
+    *                  encoding-damage gate — runs first among the
+    *                  optional predicates since transcoding damage
+    *                  poisons every downstream text rule)
+    *  2. exact      — one survivor per normalized fingerprint
+    *  3. near-dup   — [[graft.dedup.Dedup.nearDupClusters]] (LSH
+    *                  candidates → exact verify → components), keep each
+    *                  component's representative; with `maxPerDomain`
+    *                  then a FineWeb-style per-registrable-domain cap
+    *                  over `urlCol` ([[graft.text.UrlOps.capPerDomain]]);
+    *                  with `tokenBudget` then best-quality-first
+    *                  selection until the budget fills
+    *                  ([[graft.text.TextOps.selectUnderTokenBudget]])
+    *  4. split      — deterministic md5 train/val/test
+    *  5. decontam   — drop training docs sharing any word
+    *                  `decontamN`-gram with the held-out test split;
+    *                  with `fuzzyDecontaminate` ALSO drop training docs
+    *                  that are MinHash near-dups (exact-verified Jaccard
+    *                  ≥ `fuzzyMinJaccard`) of any test doc — the
+    *                  paraphrase-tolerant pass exact n-grams miss
+    *
+    * Returns the curated corpus with the `split` column. Every stage's
+    * shuffle posture is the operator's own (see SURVEY.md §9); the gate
+    * runs first so all downstream shuffles move only surviving docs.
+    *
+    * Two lazy local checkpoints bound the recomputation. The gated docs
+    * are stored once on disk, after the last map-only gate, so the input
+    * is scanned and gated once however many stages read it; on the
+    * default path building them fires no job. The split frame is stored
+    * too, because its three consumers (train, test and the non-train
+    * rows) would otherwise each run both dedups again; building it runs
+    * the dedup shuffles. Inside the near-dup stage the candidate pairs
+    * are persisted until the components are found and released before
+    * this returns; the checkpoints' blocks go once the result is
+    * unreferenced. */
   def curate(docs0: DataFrame, minQuality: Double = 0.3,
              minJaccard: Double = 0.8, decontamN: Int = 8,
              adaptivePct: Option[Double] = None,
@@ -596,11 +607,21 @@ object Pipelines {
       .map(ls => gatedSafe.filter(
         TextOps.detectLicense(col("text")).isin(ls: _*)))
       .getOrElse(gatedSafe)
+    // the gated docs, stored once as a lazy disk-only local checkpoint
+    // (the E1 pattern): exact dedup, near-dup clustering and the split all
+    // read them, and without it each of them scanned and gated the input
+    // again. On the default path only the scan and map-only filters sit
+    // below it, so building it fires no job; an option above that adds an
+    // exchange (priorCorpus, c4Lines, langModel, canonicalCollapse) runs
+    // that exchange while the frame is built. The blocks go when the
+    // output is unreferenced
+    val gatedOnce = gatedLicensed
+      .localCheckpoint(eager = false, StorageLevel.DISK_ONLY)
     // optional per-source adaptive bar on top of the absolute floor
     val gated = adaptivePct
-      .map(p => TextOps.adaptiveQualityGate(gatedLicensed, pct = p)
+      .map(p => TextOps.adaptiveQualityGate(gatedOnce, pct = p)
         .drop("quality", "thr"))
-      .getOrElse(gatedLicensed)
+      .getOrElse(gatedOnce)
     // optional CCNet-style paragraph dedup (q169's operator), BEFORE
     // the doc-level dedups: removing shared boilerplate paragraphs
     // first lets two pages that differ only by their nav bars collapse
@@ -712,8 +733,11 @@ object Pipelines {
       deduped.join(keep, Seq("doc_id"), "left_semi")
     }.getOrElse(deduped)
     // three consumers below (train branch, test branch, non-train union);
-    // without persisting, the gate + both dedup subtrees execute 3x per
-    // action. localCheckpoint (lazy) rather than cache: blocks are
+    // without this second checkpoint both dedup subtrees execute 3x per
+    // action (the gated checkpoint only saves their scan). Building it runs
+    // the dedup shuffles; without it a traced curate_corpus benchmark unit
+    // (seed 11, 4 vCPU) fired 54 jobs instead of 38 and took 7.6 s instead
+    // of 5.5. localCheckpoint (lazy) rather than cache: blocks are
     // reclaimed by the ContextCleaner once the frame is unreferenced, so
     // repeated curate calls in a long-running job don't accumulate
     // unreleasable storage memory

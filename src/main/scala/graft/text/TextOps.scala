@@ -3011,21 +3011,23 @@ object TextOps {
     val spark = docs.sparkSession
     import spark.implicits._
     val bl = budgets.toSeq.toDF(groupCol, "_budget")
-    // persisted because BOTH passes of the prefix-sum decomposition
-    // (bin totals, then the per-doc window) consume it: without the
-    // persist each consumer re-evaluates the quality battery over the
-    // corpus text (the optimizer specializes the shared subtree per
-    // consumer, so exchange reuse cannot kick in). The cached frame is
-    // the NARROW (group, id, quality, n_tokens, budget) projection —
-    // bytes per row, not the corpus — the standard materialization a
-    // distributed prefix sum needs. Released by the harness
-    // clearCache() between queries.
+    // stored once because BOTH passes of the prefix-sum decomposition
+    // (bin totals, then the per-doc window) consume it: otherwise each
+    // consumer re-evaluates the quality battery over the corpus text
+    // (the optimizer specializes the shared subtree per consumer, so
+    // exchange reuse cannot kick in). The stored frame is the NARROW
+    // (group, id, quality, n_tokens, budget) projection — bytes per row,
+    // not the corpus — the standard materialization a distributed prefix
+    // sum needs. A lazy local checkpoint, not a persist: its blocks go
+    // once the result is unreferenced, where a cache entry stayed pinned
+    // for the life of the session. Over an input with exchanges, building
+    // it runs them
     val t = docs.join(broadcast(bl), Seq(groupCol))
       .select(col(groupCol), col(idCol),
         round(qualityScore(col(textCol)), qualityDp).as("quality"),
         tokenCount(col(textCol)).cast("long").as("n_tokens"),
         col("_budget"))
-      .persist()
+      .localCheckpoint(eager = false)
     val bins = t.groupBy(groupCol, "quality")
       .agg(sum("n_tokens").as("_btok"), first("_budget").as("_b"))
     val wBins = org.apache.spark.sql.expressions.Window
@@ -3049,13 +3051,13 @@ object TextOps {
                              textCol: String = "text",
                              qualityDp: Int = 6): DataFrame = {
     require(budgetTokens >= 0, "budget must be non-negative")
-    // persisted for the same two-consumer reason as the per-group form:
-    // one quality-battery pass over the text, both prefix-sum passes
-    // read the narrow cached frame
+    // stored for the same two-consumer reason, and released the same
+    // way, as in the per-group form: one quality-battery pass over the
+    // text, both prefix-sum passes read the narrow checkpoint
     val t = docs.select(col(idCol),
       round(qualityScore(col(textCol)), qualityDp).as("quality"),
       tokenCount(col(textCol)).cast("long").as("n_tokens"))
-      .persist()
+      .localCheckpoint(eager = false)
     val bins = t.groupBy("quality")
       .agg(sum("n_tokens").as("_btok"))
     val wBins = org.apache.spark.sql.expressions.Window

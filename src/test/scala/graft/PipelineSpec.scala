@@ -873,6 +873,245 @@ class PipelineSpec extends SparkSpec {
     assert(!byId(51L).contains("newsletter"))
   }
 
+  /** A seeded corpus for the curate specs: clean English docs, exact-dup
+    * groups (case and whitespace variants), near-dup groups (two words of
+    * 140 changed), junk the gate drops, and train docs that leak a test
+    * doc (one copies a 12-word span, one paraphrases every ninth word).
+    * Returns (doc_id, text, source, n_chars) rows and the ids curate must
+    * drop: the junk, the leaks and the dup groups (one of each survives). */
+  private def curateCorpus(seed: Long): (DataFrame, CorpusTruth) = {
+    val rng = new scala.util.Random(seed)
+    val stop = Array("the", "a", "and", "of", "to", "in", "is", "it",
+      "that", "for", "on", "with", "as", "at", "by", "from", "this", "was")
+    val words = Array.fill(400)((0 until 2 + rng.nextInt(3)).map(_ =>
+      s"${"bcdfgklmnprstvwz"(rng.nextInt(16))}${"aeiou"(rng.nextInt(5))}")
+      .mkString)
+    // stopword share in twentieths: the quality score rises with it up
+    // to 5, and near 3 a doc can fall under the English threshold
+    def english(n: Int, stops: Int = 8): Array[String] = Array.fill(n)(
+      if (rng.nextInt(20) < stops) stop(rng.nextInt(stop.length))
+      else words(rng.nextInt(words.length)))
+    var lastId = 100L
+    def nextId(): Long = { lastId += 1; lastId }
+    val clean = Seq.fill(40)((nextId(),
+      english(100 + rng.nextInt(40), 4 + rng.nextInt(3)).mkString(" ")))
+    val exactDups = (0 until 3).flatMap { _ =>
+      val base = english(110).mkString(" ")
+      Seq(base, base.toUpperCase, base.replace(" the ", "  the "))
+        .map(t => (nextId(), t))
+    }
+    val nearDups = (0 until 3).flatMap { _ =>
+      val base = english(140)
+      (0 until 3).map { c =>
+        val w = base.clone()
+        if (c > 0) (0 until 2).foreach(_ =>
+          w(5 + rng.nextInt(130)) = words(rng.nextInt(words.length)))
+        (nextId(), w.mkString(" "))
+      }
+    }
+    val junk = Seq((nextId(), "!! ## $$ %% && ** !! ##"),
+      (nextId(), null.asInstanceOf[String]))
+    def splitOf(ids: Seq[Long]): Map[Long, String] = ids.toDF("doc_id")
+      .select($"doc_id", graft.text.TextOps.hashSplit($"doc_id"))
+      .as[(Long, String)].collect().toMap
+    val cleanSplit = splitOf(clean.map(_._1))
+    val testDocs = clean.filter(d => cleanSplit(d._1) == "test")
+    val trainIds = splitOf(Seq.fill(20)(nextId())).filter(_._2 == "train")
+      .keys.toSeq.sorted
+    require(testDocs.size >= 2 && trainIds.size >= 2)
+    val leaks = testDocs.take(2).zip(trainIds).zipWithIndex.map {
+      case (((_, text), lid), i) =>
+        val sw = text.split(" ")
+        (lid, if (i == 0) (english(40) ++ sw.slice(20, 32) ++ english(40))
+            .mkString(" ")
+          else sw.zipWithIndex.map { case (w, j) =>
+            if (j % 9 == 4) words(rng.nextInt(words.length)) else w
+          }.mkString(" "))
+    }
+    val docs = (clean ++ exactDups ++ nearDups ++ junk ++ leaks)
+      .toDF("doc_id", "text")
+      .withColumn("source", when($"doc_id" % 2 === 0, "a").otherwise("b"))
+      .withColumn("n_chars", length($"text").cast("long"))
+    (docs, CorpusTruth(junk.map(_._1).toSet, leaks.map(_._1).toSet,
+      (exactDups ++ nearDups).map(_._1).grouped(3).map(_.toSet).toSeq))
+  }
+
+  private case class CorpusTruth(junk: Set[Long], leaks: Set[Long],
+                                 dupGroups: Seq[Set[Long]])
+
+  /** [[Pipelines.curate]] (minJaccard 0.8, fuzzyDecontaminate) written out
+    * by hand from its operators, with no checkpoint between them: the
+    * kept ids of the plain composition. */
+  private def handCurated(docs: DataFrame,
+                          prior: Option[DataFrame] = None,
+                          fuzzyPrior: Boolean = false,
+                          adaptivePct: Option[Double] = None,
+                          tokenBudget: Option[Long] = None): Set[Long] = {
+    import graft.dedup.Dedup
+    import graft.text.TextOps
+    val freshExact = prior.map(Dedup.incrementalNew(docs, _)).getOrElse(docs)
+    val fresh = prior.filter(_ => fuzzyPrior)
+      .map(Dedup.incrementalNewFuzzy(freshExact, _)).getOrElse(freshExact)
+    val gated0 = fresh.filter($"text".isNotNull)
+      .filter(TextOps.langIdEn($"text") === "en")
+      .filter(TextOps.qualityScore($"text") >= 0.3)
+    val gated = adaptivePct.map(p => TextOps.adaptiveQualityGate(gated0,
+      pct = p).drop("quality", "thr")).getOrElse(gated0)
+    val exact = gated.join(Dedup.normalized(gated)
+      .select($"keep_id".as("doc_id")), Seq("doc_id"), "left_semi")
+    val reps = Dedup.nearDupClusters(exact, minJaccard = 0.8)
+      .filter($"doc_id" === $"cluster_id").select("doc_id")
+    val deduped = exact.join(reps, Seq("doc_id"), "left_semi")
+    val budgeted = tokenBudget.map(b => deduped.join(
+      TextOps.selectUnderTokenBudget(deduped, b).select("doc_id"),
+      Seq("doc_id"), "left_semi")).getOrElse(deduped)
+    val split = budgeted.withColumn("split", TextOps.hashSplit($"doc_id"))
+    val test = split.filter($"split" === "test")
+    val train = TextOps.decontaminate(split.filter($"split" === "train"),
+      test)
+    Dedup.decontaminateFuzzy(train, test)
+      .unionByName(split.filter($"split" =!= "train"))
+      .select("doc_id").as[Long].collect().toSet
+  }
+
+  test("E4 curate: one scan of the input feeds every stage") {
+    val (docs, _) = curateCorpus(11)
+    val dir = Files.createTempDirectory("graft_curate_scan")
+      .resolve("docs").toString
+    docs.coalesce(1).write.parquet(dir)
+    val (scans, _) = fileScans {
+      Pipelines.curate(spark.read.parquet(dir), fuzzyDecontaminate = true)
+        .collect()
+    }
+    // before the gated docs were stored, the exact dedup, the near-dup
+    // clustering and the split each scanned and gated the input again:
+    // 12 stages read this fixture
+    assert(scans == 1, s"$scans stages scanned the input")
+  }
+
+  test("E4 curate keeps the rows of its plain operator composition") {
+    val (docs, truth) = curateCorpus(11)
+    val kept = Pipelines.curate(docs, minJaccard = 0.8,
+      fuzzyDecontaminate = true).select("doc_id").as[Long].collect().toSet
+    assert(kept == handCurated(docs))
+    // every stage has work to do on the fixture
+    assert(kept.intersect(truth.junk ++ truth.leaks).isEmpty, kept)
+    assert(truth.dupGroups.forall(g => kept.intersect(g).size == 1), kept)
+    // a prior corpus with one doc verbatim and one with a word changed
+    val Array(a, b) = docs.filter($"doc_id".isin(kept.toSeq: _*))
+      .orderBy("doc_id").select("doc_id", "text").as[(Long, String)].take(2)
+    val prior = Seq((9001L, a._2),
+      (9002L, b._2.split(" ").updated(50, "zzz").mkString(" ")))
+      .toDF("doc_id", "text")
+    val withPrior = Pipelines.curate(docs, minJaccard = 0.8,
+      fuzzyDecontaminate = true, priorCorpus = Some(prior),
+      fuzzyPrior = true).select("doc_id").as[Long].collect().toSet
+    assert(withPrior == handCurated(docs, Some(prior), fuzzyPrior = true))
+    assert(withPrior.intersect(Set(a._1, b._1)).isEmpty)
+    val adaptive = Pipelines.curate(docs, minJaccard = 0.8,
+      fuzzyDecontaminate = true, adaptivePct = Some(0.3))
+      .select("doc_id").as[Long].collect().toSet
+    assert(adaptive == handCurated(docs, adaptivePct = Some(0.3)))
+    assert(adaptive.size < kept.size)
+    val budget = 3000L
+    val budgeted = Pipelines.curate(docs, minJaccard = 0.8,
+      fuzzyDecontaminate = true, tokenBudget = Some(budget))
+      .select("doc_id").as[Long].collect().toSet
+    assert(budgeted == handCurated(docs, tokenBudget = Some(budget)))
+    assert(budgeted.nonEmpty && budgeted.size < kept.size)
+  }
+
+  test("nearDupClusters: the banding aggregate runs once per call") {
+    val (docs, _) = curateCorpus(11)
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    // the map side of the banding aggregation: its collect_list is the one
+    // object-hash aggregate here, and that side reads no shuffle
+    val banding = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val rdds = e.stageInfo.rddInfos
+        if (rdds.exists(_.scope.exists(_.name == "ObjectHashAggregate")) &&
+            !rdds.exists(_.name == "ShuffledRowRDD")) banding.incrementAndGet()
+      }
+    }
+    Bus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      graft.dedup.Dedup.nearDupClusters(docs, minJaccard = 0.8).collect()
+      Bus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    // the shingle cache's id set and the verify join each banded: 2
+    assert(banding.get == 1, s"${banding.get} banding stages")
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("token-budget selection leaves nothing cached once its result " +
+    "is dropped") {
+    import graft.text.TextOps
+    val (docs, _) = curateCorpus(11)
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    def collectAndDrop(): Unit = {
+      Pipelines.curate(docs, tokenBudget = Some(3000L)).collect()
+      TextOps.selectUnderTokenBudget(docs.filter($"text".isNotNull), 3000L)
+        .collect()
+      TextOps.selectUnderTokenBudgetByGroup(docs.filter($"text".isNotNull),
+        Map("a" -> 1000L, "b" -> 2000L)).collect()
+    }
+    collectAndDrop()
+    var polls = 0
+    while (!cache.isEmpty && polls < 50) {
+      System.gc(); Thread.sleep(100); polls += 1
+    }
+    assert(cache.isEmpty, s"still cached after $polls collections")
+  }
+
+  test("connectedComponents names its build-time jobs and restores the " +
+    "caller's job description") {
+    import graft.dedup.Dedup
+    import org.apache.spark.scheduler.SparkListenerJobStart
+    val sc = spark.sparkContext
+    val key = "spark.job.description"
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        names.add(String.valueOf(e.properties.getProperty(key)))
+    }
+    val nodes = (1L to 6L).toDF("id")
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
+    def run(driverMaxEdges: Long): (Set[String], String, Set[String]) = {
+      names.clear()
+      Bus.drain(sc)
+      sc.addSparkListener(listener)
+      sc.setJobDescription("caller")
+      try {
+        val out = Dedup.connectedComponents(nodes, pairs,
+          driverMaxEdges = driverMaxEdges)
+        Bus.drain(sc)
+        val built = names.toArray(Array.empty[String]).toSet
+        val restored = sc.getLocalProperty(key)
+        names.clear()
+        assert(out.collect().length == 6)
+        Bus.drain(sc)
+        (built, restored, names.toArray(Array.empty[String]).toSet)
+      } finally {
+        sc.removeSparkListener(listener)
+        sc.setJobDescription(null)
+      }
+    }
+    val (driver, restored1, after1) = run(2000000L)
+    assert(Set("connectedComponents: edge gate",
+      "connectedComponents: driver union-find").subsetOf(driver), driver)
+    assert(restored1 == "caller" && after1 == Set("caller"), after1)
+    val (bsp, restored2, after2) = run(0L)
+    assert(Set("connectedComponents: edge gate",
+      "connectedComponents: label sum",
+      "connectedComponents: label round").subsetOf(bsp), bsp)
+    assert(!bsp.exists(_.contains("union-find")), bsp)
+    assert(restored2 == "caller" && after2 == Set("caller"), after2)
+  }
+
   test("E5 releaseAudit: one call yields the four audit frames") {
     val base = "the quick brown fox jumps over the lazy dog near the " +
       "old stone house by the river bank in the quiet morning light"

@@ -568,30 +568,29 @@ object Dedup {
     * Scale shape: both corpora band once ([[minhashCandidates]] over the
     * tagged union — per-band buckets bound the join), the exact verify
     * touches candidates only, and the drop is one left_anti on train
-    * ids. Internally train/test ids map to a disjoint 2k / 2k+1
-    * composite space (ids must fit 62 bits) so the two corpora may share
-    * id values. */
+    * ids. Internally each id travels as a (side, id) struct, so the two
+    * corpora may share id values and no arithmetic touches the id: any
+    * long is safe under ANSI. [[graft.pipeline.Pipelines
+    * .curate]] reads its near-dup pass's scored pairs instead of calling
+    * this when both passes band alike ([[nearDupClustersAndPairs]]). */
   def decontaminateFuzzy(train: DataFrame, test: DataFrame,
                          idCol: String = "doc_id",
                          textCol: String = "text", shingleN: Int = 3,
                          minJaccard: Double = 0.5, numHashes: Int = 64,
                          bands: Int = 16,
                          portable: Boolean = false): DataFrame = {
-    val t2 = train.select((col(idCol) * 2).as("cid"),
-      col(textCol).as("ctext"))
-    val e2 = test.select((col(idCol) * 2 + 1).as("cid"),
-      col(textCol).as("ctext"))
-    val u = t2.unionByName(e2)
+    def tagged(df: DataFrame, side: Int): DataFrame =
+      df.select(struct(lit(side).as("side"), col(idCol).as("id")).as("cid"),
+        col(textCol).as("ctext"))
+    val u = tagged(train, 0).unionByName(tagged(test, 1))
+    // structs order by their first field, so a crossing pair, which
+    // minhashCandidates emits with id_a < id_b, has its train end in id_a
     val cand = minhashCandidates(u, "cid", "ctext", shingleN, numHashes,
         bands, portable)
-      // cross-corpus pairs only: composite-id parity encodes the side
-      .filter((col("id_a") % 2) =!= (col("id_b") % 2))
+      .filter(col("id_a.side") < col("id_b.side"))
     val contaminated = jaccardForPairs(u, cand, "cid", "ctext", shingleN)
       .filter(col("jaccard") >= minJaccard)
-      .select(when(col("id_a") % 2 === 0, col("id_a"))
-        .otherwise(col("id_b")).as("cid"))
-      // integer div, not `/`: long/long is DOUBLE division in Spark SQL
-      .select(expr("cid div 2").as(idCol))
+      .select(col("id_a.id").as(idCol))
       .distinct()
     train.join(contaminated, Seq(idCol), "left_anti")
   }
@@ -601,27 +600,52 @@ object Dedup {
     * Every stage's volume is bounded by true near-dup density, never by
     * corpus size squared. The candidate pairs are persisted while the
     * components are found: the shingle cache's id set and the verify join
-    * both read them, so the signatures and the banding run once. */
+    * both read them, so the signatures and the banding run once. This is
+    * [[nearDupClustersAndPairs]] without the scored pairs. */
   def nearDupClusters(docs: DataFrame, idCol: String = "doc_id",
                       textCol: String = "text", shingleN: Int = 3,
                       minJaccard: Double = 0.5, numHashes: Int = 64,
                       bands: Int = 16,
-                      portable: Boolean = false): DataFrame = {
+                      portable: Boolean = false): DataFrame =
+    nearDupClustersAndPairs(docs, idCol, textCol, shingleN, minJaccard,
+      minJaccard, numHashes, bands, portable)._1
+
+  /** [[nearDupClusters]] and its scored pairs: (id_a, id_b, jaccard) for
+    * every candidate pair with exact Jaccard ≥ `pairMinJaccard`, which
+    * must not exceed `minJaccard`. The pairs are stored once as a lazy
+    * local checkpoint: building it runs the banding and verify shuffles
+    * (named "nearDupClusters: scored pairs"), and the components' edge
+    * gate fills its blocks. Every later reader takes the stored pairs, so
+    * a second consumer of the same corpus's near-dups signs, bands and
+    * verifies nothing again. LSH bucket membership depends only on a
+    * doc's own signature, so the candidates of any subset of `docs` are
+    * exactly the pairs whose two ends lie in that subset. The blocks go
+    * once the pairs frame is unreferenced. */
+  private[graft] def nearDupClustersAndPairs(docs: DataFrame, idCol: String,
+      textCol: String, shingleN: Int, minJaccard: Double,
+      pairMinJaccard: Double, numHashes: Int, bands: Int,
+      portable: Boolean): (DataFrame, DataFrame) = {
+    require(pairMinJaccard <= minJaccard,
+      s"pairMinJaccard $pairMinJaccard exceeds minJaccard $minJaccard")
     val cand = minhashCandidates(docs, idCol, textCol, shingleN, numHashes,
       bands, portable).persist()
     val (jac, shCache) =
       jaccardForPairsWithHandle(docs, cand, idCol, textCol, shingleN)
-    val verified = jac.filter(col("jaccard") >= minJaccard)
+    val scored = graft.Jobs.withJobDescription(docs.sparkSession,
+        "nearDupClusters", "scored pairs") {
+      jac.filter(col("jaccard") >= pairMinJaccard).localCheckpoint(false)
+    }
     // connectedComponents materializes its edge set before returning (the
     // gate count + either the driver collect or the checkpointed BSP
-    // labels), so both caches have served every consumer by here. The
-    // shingle cache is built on the candidates: release it first
+    // labels), so the scored pairs are stored and both caches have served
+    // every consumer by here. The shingle cache is built on the
+    // candidates: release it first
     val out = connectedComponents(docs.select(col(idCol).as("id")),
-        verified, pairsVerified = true)
+        scored.filter(col("jaccard") >= minJaccard), pairsVerified = true)
       .select(col("id").as(idCol), col("cluster_id"))
     shCache.unpersist(false)
     cand.unpersist(false)
-    out
+    (out, scored)
   }
 
   /** Incremental-ingest dedup: from a NEW batch, keep only documents whose
@@ -661,7 +685,7 @@ object Dedup {
     * [[incrementalNew]]'s exact digests (a re-crawl with one word
     * changed sails through a digest anti-join). Delegates to
     * [[decontaminateFuzzy]]: identical banded crossing-pairs shape
-    * (parity-tagged composite ids, so overlapping id SPACES between
+    * (side-tagged ids, so overlapping id SPACES between
     * batch and corpus are safe), identical 100 TB posture — the corpus
     * participates as signatures and verified candidates, never as
     * all-pairs. Run AFTER [[incrementalNew]] so exact re-crawls are

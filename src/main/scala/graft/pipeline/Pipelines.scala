@@ -407,21 +407,32 @@ object Pipelines {
     *                  with `fuzzyDecontaminate` ALSO drop training docs
     *                  that are MinHash near-dups (exact-verified Jaccard
     *                  ≥ `fuzzyMinJaccard`) of any test doc — the
-    *                  paraphrase-tolerant pass exact n-grams miss
+    *                  paraphrase-tolerant pass exact n-grams miss. When
+    *                  `fuzzyNumHashes`/`fuzzyBands` equal the near-dup
+    *                  banding (64/16, the defaults) this pass signs,
+    *                  bands and verifies nothing: it reads the near-dup
+    *                  stage's scored pairs, whose train ∪ test subset is
+    *                  exactly what [[graft.dedup.Dedup.decontaminateFuzzy]]
+    *                  would find; any other banding calls that operator
     *
     * Returns the curated corpus with the `split` column. Every stage's
     * shuffle posture is the operator's own (see SURVEY.md §9); the gate
     * runs first so all downstream shuffles move only surviving docs.
     *
-    * Two lazy local checkpoints bound the recomputation. The gated docs
+    * Three lazy local checkpoints bound the recomputation. The gated docs
     * are stored once on disk, after the last map-only gate, so the input
     * is scanned and gated once however many stages read it; on the
-    * default path building them fires no job. The split frame is stored
-    * too, because its three consumers (train, test and the non-train
-    * rows) would otherwise each run both dedups again; building it runs
-    * the dedup shuffles. Inside the near-dup stage the candidate pairs
-    * are persisted until the components are found and released before
-    * this returns; the checkpoints' blocks go once the result is
+    * default path building them fires no job. The near-dup stage's scored
+    * pairs (exact Jaccard ≥ `minJaccard`, or ≥ `fuzzyMinJaccard` when
+    * that is lower and the fuzzy pass shares them) are stored once:
+    * building them runs the banding and verify shuffles, the components
+    * read the pairs at or above `minJaccard` and the fuzzy pass the pairs
+    * at or above `fuzzyMinJaccard`. The split frame is stored too,
+    * because its three consumers (train, test and the non-train rows)
+    * would otherwise each run both dedups again; building it runs the
+    * dedup shuffles. Inside the near-dup stage the candidate pairs are
+    * persisted until the components are found and released before this
+    * returns; the checkpoints' blocks go once the result is
     * unreferenced. */
   def curate(docs0: DataFrame, minQuality: Double = 0.3,
              minJaccard: Double = 0.8, decontamN: Int = 8,
@@ -636,7 +647,19 @@ object Pipelines {
     val exactKeep = Dedup.normalized(paraClean)
       .select(col("keep_id").as("doc_id"))
     val exact = paraClean.join(exactKeep, Seq("doc_id"), "left_semi")
-    val reps = Dedup.nearDupClusters(exact, minJaccard = minJaccard)
+    // the fuzzy decontamination reads the near-dup pass's scored pairs
+    // when it bands like that pass; text is not rewritten after this
+    // stage, so a pair's exact Jaccard is the one the near-dup pass scored
+    val (nearDupHashes, nearDupBands) = (64, 16)
+    val sharedFuzzy = fuzzyDecontaminate &&
+      fuzzyNumHashes == nearDupHashes && fuzzyBands == nearDupBands
+    val (clusters, scoredPairs) = Dedup.nearDupClustersAndPairs(exact,
+      "doc_id", "text", shingleN = 3, minJaccard = minJaccard,
+      pairMinJaccard =
+        if (sharedFuzzy) math.min(minJaccard, fuzzyMinJaccard)
+        else minJaccard,
+      numHashes = nearDupHashes, bands = nearDupBands, portable = false)
+    val reps = clusters
       .filter(col("doc_id") === col("cluster_id")).select("doc_id")
     val textDeduped = exact.join(reps, Seq("doc_id"), "left_semi")
     // optional SemDeDup pass (q59's operator) AFTER the text dedups —
@@ -749,14 +772,27 @@ object Pipelines {
     // optional paraphrase-tolerant second pass over the SAME held-out
     // corpus: exact n-gram containment misses light rewrites (a leak
     // with every 8th word changed shares no 8-gram), MinHash near-dup
-    // verification catches them (q142's operator). Runs on the already
-    // exact-cleaned train side, so it only pays for the survivors
+    // verification catches them (q142's operator). Both ends of a
+    // train–test pair survived the near-dup stage, and their bucket
+    // membership depends only on their own signatures, so the pairs
+    // decontaminateFuzzy would find over train ∪ test are the stored
+    // pairs with one end in each: drop every exact-cleaned train doc
+    // with a stored pair at or above fuzzyMinJaccard to a test doc
     val cleanTrain =
-      if (fuzzyDecontaminate)
+      if (!fuzzyDecontaminate) cleanExact
+      else if (sharedFuzzy) {
+        val leaked = scoredPairs
+          .filter(col("jaccard") >= fuzzyMinJaccard)
+          .select(inline(array(
+            struct(col("id_a").as("doc_id"), col("id_b").as("peer")),
+            struct(col("id_b").as("doc_id"), col("id_a").as("peer")))))
+          .join(testSplit.select(col("doc_id").as("peer")), Seq("peer"),
+            "left_semi")
+        cleanExact.join(leaked, Seq("doc_id"), "left_anti")
+      } else
         Dedup.decontaminateFuzzy(cleanExact, testSplit,
           minJaccard = fuzzyMinJaccard, numHashes = fuzzyNumHashes,
           bands = fuzzyBands)
-      else cleanExact
     cleanTrain.unionByName(split.filter(col("split") =!= "train"))
   }
 

@@ -940,13 +940,16 @@ class PipelineSpec extends SparkSpec {
                                  dupGroups: Seq[Set[Long]])
 
   /** [[Pipelines.curate]] (minJaccard 0.8, fuzzyDecontaminate) written out
-    * by hand from its operators, with no checkpoint between them: the
-    * kept ids of the plain composition. */
+    * by hand from its operators, with no checkpoint between them and its
+    * own fuzzy decontamination pass: the kept ids of the plain
+    * composition. */
   private def handCurated(docs: DataFrame,
                           prior: Option[DataFrame] = None,
                           fuzzyPrior: Boolean = false,
                           adaptivePct: Option[Double] = None,
-                          tokenBudget: Option[Long] = None): Set[Long] = {
+                          tokenBudget: Option[Long] = None,
+                          fuzzyMinJaccard: Double = 0.5,
+                          maxPerDomain: Option[Int] = None): Set[Long] = {
     import graft.dedup.Dedup
     import graft.text.TextOps
     val freshExact = prior.map(Dedup.incrementalNew(docs, _)).getOrElse(docs)
@@ -961,7 +964,9 @@ class PipelineSpec extends SparkSpec {
       .select($"keep_id".as("doc_id")), Seq("doc_id"), "left_semi")
     val reps = Dedup.nearDupClusters(exact, minJaccard = 0.8)
       .filter($"doc_id" === $"cluster_id").select("doc_id")
-    val deduped = exact.join(reps, Seq("doc_id"), "left_semi")
+    val deduped0 = exact.join(reps, Seq("doc_id"), "left_semi")
+    val deduped = maxPerDomain.map(k => graft.text.UrlOps.capPerDomain(
+      deduped0, "url", k)).getOrElse(deduped0)
     val budgeted = tokenBudget.map(b => deduped.join(
       TextOps.selectUnderTokenBudget(deduped, b).select("doc_id"),
       Seq("doc_id"), "left_semi")).getOrElse(deduped)
@@ -969,7 +974,7 @@ class PipelineSpec extends SparkSpec {
     val test = split.filter($"split" === "test")
     val train = TextOps.decontaminate(split.filter($"split" === "train"),
       test)
-    Dedup.decontaminateFuzzy(train, test)
+    Dedup.decontaminateFuzzy(train, test, minJaccard = fuzzyMinJaccard)
       .unionByName(split.filter($"split" =!= "train"))
       .select("doc_id").as[Long].collect().toSet
   }
@@ -1021,12 +1026,12 @@ class PipelineSpec extends SparkSpec {
     assert(budgeted.nonEmpty && budgeted.size < kept.size)
   }
 
-  test("nearDupClusters: the banding aggregate runs once per call") {
-    val (docs, _) = curateCorpus(11)
+  /** Runs `body` and returns how many map sides of a MinHash banding
+    * aggregation it ran: the banding's collect_list is the one
+    * object-hash aggregate in the dedup stages, and its map side reads no
+    * shuffle. */
+  private def bandingStages(body: => Unit): Int = {
     val sc = spark.sparkContext
-    spark.catalog.clearCache()
-    // the map side of the banding aggregation: its collect_list is the one
-    // object-hash aggregate here, and that side reads no shuffle
     val banding = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
@@ -1037,20 +1042,143 @@ class PipelineSpec extends SparkSpec {
     }
     Bus.drain(sc)
     sc.addSparkListener(listener)
-    try {
+    try { body; Bus.drain(sc) } finally sc.removeSparkListener(listener)
+    banding.get
+  }
+
+  /** Polls the collector until nothing is cached, and says whether that
+    * happened: cache entries a result frame pins go once it is dropped. */
+  private def cacheEmptiesAfterGc(): Boolean = {
+    val cache = spark.sharedState.cacheManager
+    var polls = 0
+    while (!cache.isEmpty && polls < 50) {
+      System.gc(); Thread.sleep(100); polls += 1
+    }
+    cache.isEmpty
+  }
+
+  test("nearDupClusters: the banding aggregate runs once per call") {
+    val (docs, _) = curateCorpus(11)
+    spark.catalog.clearCache()
+    val banding = bandingStages {
       graft.dedup.Dedup.nearDupClusters(docs, minJaccard = 0.8).collect()
-      Bus.drain(sc)
-    } finally sc.removeSparkListener(listener)
+    }
     // the shingle cache's id set and the verify join each banded: 2
-    assert(banding.get == 1, s"${banding.get} banding stages")
+    assert(banding == 1, s"$banding banding stages")
     assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("E4 curate: near-dup clustering and fuzzy decontamination share " +
+    "one banding pass") {
+    val (docs, _) = curateCorpus(11)
+    spark.catalog.clearCache()
+    val banding = bandingStages {
+      Pipelines.curate(docs, fuzzyDecontaminate = true).collect()
+    }
+    // decontaminateFuzzy signed and banded train ∪ test again: 2
+    assert(banding == 1, s"$banding banding stages")
+    assert(cacheEmptiesAfterGc(), "still cached after 50 collections")
+  }
+
+  /** A paraphrase of `text` that changes every 8th word from `offset`:
+    * no 8-gram survives, so only the fuzzy pass can catch it (exact
+    * Jaccard about 0.45). Stopwords swap for other stopwords, so the
+    * quality and language gates judge it as they judge the original. */
+  private def fuzzyLeak(text: String, offset: Int): String = {
+    val stop = Seq("the", "a", "and", "of", "to", "in", "is", "it")
+    text.split(" ").zipWithIndex.map { case (w, i) =>
+      if (i % 8 != offset) w
+      else if (stop.contains(w)) stop((stop.indexOf(w) + 1) % stop.size)
+      else w + "x"
+    }.mkString(" ")
+  }
+
+  test("E4 curate's fuzzy pass over the near-dup pairs keeps the rows of " +
+    "decontaminateFuzzy") {
+    def kept(df: DataFrame): Set[Long] =
+      df.select("doc_id").as[Long].collect().toSet
+    for (seed <- 11 to 13) {
+      val (docs, _) = curateCorpus(seed)
+      assert(kept(Pipelines.curate(docs, fuzzyDecontaminate = true)) ==
+        handCurated(docs), s"seed $seed")
+    }
+    // a fuzzy-only leak of a kept test doc, under a fresh train id
+    val (docs0, _) = curateCorpus(11)
+    val base = Pipelines.curate(docs0, fuzzyDecontaminate = true)
+    val test = base.filter($"split" === "test")
+      .select("doc_id", "text").as[(Long, String)].collect().sortBy(_._1)
+    val leakId = (5000L until 5100L).toDF("doc_id")
+      .filter(graft.text.TextOps.hashSplit($"doc_id") === "train")
+      .as[Long].head()
+    // at Jaccard 0.45, 64 hashes in 16 bands make a pair a candidate about
+    // half the time: take the first paraphrase the banding pairs up
+    val leakText = (0 until 8).iterator.map(fuzzyLeak(test.head._2, _))
+      .find(t => graft.dedup.Dedup.minhashCandidates(
+        Seq((1L, test.head._2), (2L, t)).toDF("doc_id", "text"))
+        .count() == 1)
+      .get
+    val leak = Seq((leakId, leakText)).toDF("doc_id", "text")
+      .withColumn("source", lit("a"))
+      .withColumn("n_chars", length($"text").cast("long"))
+    // one domain holds the leaked test doc and a doc ahead of it in the
+    // cap's md5 order, so a cap of 1 drops the test doc; every other doc
+    // has a domain of its own
+    val ahead = kept(base).filter(_ != test.head._1).toSeq.toDF("doc_id")
+      .filter(md5($"doc_id".cast("string")) <
+        md5(lit(test.head._1.toString)))
+      .as[Long].head()
+    val docs = docs0.unionByName(leak).withColumn("url",
+      when($"doc_id".isin(test.head._1, ahead), lit("https://eval.org/p"))
+        .otherwise(concat(lit("https://site"), $"doc_id", lit(".org/p"))))
+    for (fuzzyMin <- Seq(0.3, 0.5, 0.9)) {
+      val got = kept(Pipelines.curate(docs, fuzzyDecontaminate = true,
+        fuzzyMinJaccard = fuzzyMin))
+      assert(got == handCurated(docs, fuzzyMinJaccard = fuzzyMin), fuzzyMin)
+      // only the threshold under the leak's Jaccard drops it
+      assert(got.contains(leakId) == (fuzzyMin > 0.45), fuzzyMin)
+    }
+    // the cap drops the leaked test doc after the near-dup stage, so its
+    // stored pair with the leak must not drop the leak
+    val capped = kept(Pipelines.curate(docs, fuzzyDecontaminate = true,
+      fuzzyMinJaccard = 0.3, maxPerDomain = Some(1)))
+    assert(capped == handCurated(docs, fuzzyMinJaccard = 0.3,
+      maxPerDomain = Some(1)))
+    assert(!capped.contains(test.head._1) && capped.contains(leakId),
+      capped)
+    val budget = 3000L
+    val budgeted = kept(Pipelines.curate(docs, fuzzyDecontaminate = true,
+      fuzzyMinJaccard = 0.3, tokenBudget = Some(budget)))
+    assert(budgeted == handCurated(docs, fuzzyMinJaccard = 0.3,
+      tokenBudget = Some(budget)))
+    assert(budgeted.nonEmpty)
+  }
+
+  test("decontaminateFuzzy and incrementalNewFuzzy take ids anywhere in " +
+    "the long range") {
+    import graft.dedup.Dedup
+    val words = (1 to 80).map(i => s"word$i")
+    val text = words.mkString(" ")
+    val nearCopy = words.updated(40, "changed").mkString(" ")
+    val other = (1 to 80).map(i => s"other$i").mkString(" ")
+    val (big, small, mid) = (Long.MaxValue - 1, Long.MinValue + 1, 1L << 62)
+    val train = Seq((big, text), (mid, other)).toDF("doc_id", "text")
+    def ids(df: DataFrame): Set[Long] =
+      df.select("doc_id").as[Long].collect().toSet
+    // doubling any of these ids overflows a long
+    val test = Seq((small, nearCopy)).toDF("doc_id", "text")
+    assert(ids(Dedup.decontaminateFuzzy(train, test)) == Set(mid))
+    assert(ids(Dedup.incrementalNewFuzzy(train, test)) == Set(mid))
+    // the two sides may share id values
+    val sharing = Seq((mid, nearCopy)).toDF("doc_id", "text")
+    assert(ids(Dedup.decontaminateFuzzy(train, sharing)) == Set(mid))
+    assert(ids(Dedup.decontaminateFuzzy(train, sharing, numHashes = 16,
+      bands = 4, portable = true)) == Set(mid))
   }
 
   test("token-budget selection leaves nothing cached once its result " +
     "is dropped") {
     import graft.text.TextOps
     val (docs, _) = curateCorpus(11)
-    val cache = spark.sharedState.cacheManager
     spark.catalog.clearCache()
     def collectAndDrop(): Unit = {
       Pipelines.curate(docs, tokenBudget = Some(3000L)).collect()
@@ -1060,11 +1188,7 @@ class PipelineSpec extends SparkSpec {
         Map("a" -> 1000L, "b" -> 2000L)).collect()
     }
     collectAndDrop()
-    var polls = 0
-    while (!cache.isEmpty && polls < 50) {
-      System.gc(); Thread.sleep(100); polls += 1
-    }
-    assert(cache.isEmpty, s"still cached after $polls collections")
+    assert(cacheEmptiesAfterGc(), "still cached after 50 collections")
   }
 
   test("connectedComponents names its build-time jobs and restores the " +
@@ -1110,6 +1234,23 @@ class PipelineSpec extends SparkSpec {
       "connectedComponents: label round").subsetOf(bsp), bsp)
     assert(!bsp.exists(_.contains("union-find")), bsp)
     assert(restored2 == "caller" && after2 == Set("caller"), after2)
+    // building curate runs the near-dup pass's banding and verify
+    // shuffles under the scored-pairs name
+    val (docs, _) = curateCorpus(11)
+    names.clear()
+    Bus.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobDescription("caller")
+    try {
+      Pipelines.curate(docs, fuzzyDecontaminate = true)
+      Bus.drain(sc)
+      val built = names.toArray(Array.empty[String]).toSet
+      assert(built.contains("nearDupClusters: scored pairs"), built)
+      assert(sc.getLocalProperty(key) == "caller")
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.setJobDescription(null)
+    }
   }
 
   test("E5 releaseAudit: one call yields the four audit frames") {

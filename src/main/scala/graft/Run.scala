@@ -126,20 +126,7 @@ object Run {
     out.result()
   }
 
-  private def sparkSession(): SparkSession = {
-    // respect an external master (spark-submit / env); default local
-    val conf = new org.apache.spark.SparkConf()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val b = SparkSession.builder().appName("graft-run")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val s = (if (conf.contains("spark.master")) b
-             else b.master(s"local[$cpus]")).getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private def sparkSession(): SparkSession = Sessions.local("graft-run")
 
   // ---- shared IO helpers -------------------------------------------------
 

@@ -127,6 +127,13 @@ object SparkEntry {
       "end_time", "category"), Seq("event_type"))
   }
 
+  /** Fails with an IllegalArgumentException naming each of `names` that
+    * [[queries]] does not declare. */
+  def requireDeclared(names: Iterable[String]): Unit = {
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+  }
+
   // ----------------------------------------------------------------------
   // queries
   // ----------------------------------------------------------------------

@@ -545,16 +545,22 @@ object Pipelines {
     }
     // optional C4 line-level cleanup (q168's operator) BEFORE any
     // doc-level scoring — C4's own order: quality must judge the
-    // cleaned text, not the nav-bar noise the cleanup removes. The
-    // rewrite is map-only; the inner join back is id-keyed (the
-    // operator also drops lorem-ipsum/brace docs and zero-keep docs)
+    // cleaned text, not the nav-bar noise the cleanup removes. One
+    // map-only projection drops lorem-ipsum/brace docs and zero-keep
+    // docs; the rewritten `text` goes last (curate's output column
+    // order) and, like c4LineFilter's `cleaned`, is non-nullable
     val freshClean =
       if (!c4Lines) fresh
-      else refreshNChars(fresh.drop("text").join(
-        TextOps.c4LineFilter(fresh.filter(col("text").isNotNull),
-            scriptAware = scriptAware)
-          .select(col("doc_id"), col("cleaned").as("text")),
-        Seq("doc_id")))
+      else {
+        val t = col("text")
+        val kept = TextOps.c4KeptLines(coalesce(t, lit("")),
+          scriptAware = scriptAware)
+        val others = fresh.columns.filterNot(Set("doc_id", "text"))
+        refreshNChars(fresh.filter(t.isNotNull && !TextOps.c4DropsDoc(t))
+          .select(col("doc_id") +: others.map(col) :+
+            array_join(kept, "\n").as("text"): _*)
+          .filter(length(t) > 0))
+      }
     // language gate: the heuristic langIdEn by default; with
     // `langRouter` the MULTILINGUAL profile router decides (r14 —
     // langIdMulti's argmax must equal `lang`, so curate(lang = "de")
@@ -623,7 +629,7 @@ object Pipelines {
     // read them, and without it each of them scanned and gated the input
     // again. On the default path only the scan and map-only filters sit
     // below it, so building it fires no job; an option above that adds an
-    // exchange (priorCorpus, c4Lines, langModel, canonicalCollapse) runs
+    // exchange (priorCorpus, langModel, canonicalCollapse) runs
     // that exchange while the frame is built. The blocks go when the
     // output is unreferenced
     val gatedOnce = gatedLicensed

@@ -68,7 +68,6 @@ object Streaming {
                    unicodeNfc: Boolean = false,
                    fixEncoding: Boolean = false): DataFrame = {
     import graft.text.TextOps
-    import org.apache.spark.sql.Column
     val t0 = col(textCol)
     // the batch curate's opt-in repair + canonicalization, mirrored so
     // the streaming gate digests the SAME bytes (batch ≡ streaming
@@ -83,17 +82,10 @@ object Streaming {
     val c4ed =
       if (!c4Lines) base
       else {
-        // TextOps.c4LineFilter's rules, inlined as columns: ≥5-word
-        // terminal-punct lines kept, lorem-ipsum/brace docs dropped
-        // whole, zero-keep docs dropped
-        val lines = split(t0, "\n")
-        def keepLine(l: Column): Column =
-          size(filter(split(l, " "), w => length(w) > 0)) >= 5 &&
-            l.rlike("[.!?\"]$")
-        val cleaned = array_join(filter(lines, keepLine _), "\n")
-        val rewritten = base
-          .filter(!lower(t0).contains("lorem ipsum") && !t0.contains("{"))
-          .withColumn(textCol, cleaned)
+        // TextOps.c4LineFilter's rules: kept lines rejoined, lorem-ipsum/
+        // brace docs and zero-keep docs dropped
+        val rewritten = base.filter(!TextOps.c4DropsDoc(t0))
+          .withColumn(textCol, array_join(TextOps.c4KeptLines(t0), "\n"))
           .filter(length(col(textCol)) > 0)
         if (rewritten.columns.contains("n_chars"))
           rewritten.withColumn("n_chars",

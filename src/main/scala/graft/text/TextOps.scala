@@ -5731,15 +5731,9 @@ object TextOps {
                    scriptAware: Boolean = false): DataFrame = {
     val t = coalesce(col(textCol), lit(""))
     val lines = split(t, "\n")
-    val termClass = if (scriptAware) "[.!?\"。！？」』]$" else "[.!?\"]$"
-    def lineWords(l: Column): Column =
-      if (scriptAware) scriptAwareTokenCount(l)
-      else size(filter(split(l, " "), w => length(w) > 0)).cast("long")
-    def keepLine(l: Column): Column =
-      lineWords(l) >= minWordsPerLine && l.rlike(termClass)
-    val keptArr = filter(lines, keepLine _)
+    val keptArr = c4KeptLines(t, minWordsPerLine, scriptAware)
     val base = docs
-      .filter(!lower(t).contains("lorem ipsum") && !t.contains("{"))
+      .filter(!c4DropsDoc(t))
       .select(col(idCol), size(lines).cast("long").as("n_lines"),
         size(keptArr).cast("long").as("kept_lines"),
         array_join(keptArr, "\n").as("cleaned"))
@@ -5749,6 +5743,23 @@ object TextOps {
     else base.filter(length(col("cleaned")) -
       length(regexp_replace(col("cleaned"), sentClass, "")) >= minSentences)
   }
+
+  /** [[c4LineFilter]]'s kept lines of `text`, in order: lines with at least
+    * `minWordsPerLine` words that end in terminal punctuation. */
+  def c4KeptLines(text: Column, minWordsPerLine: Int = 5,
+                  scriptAware: Boolean = false): Column = {
+    val termClass = if (scriptAware) "[.!?\"。！？」』]$" else "[.!?\"]$"
+    def lineWords(l: Column): Column =
+      if (scriptAware) scriptAwareTokenCount(l)
+      else size(filter(split(l, " "), w => length(w) > 0)).cast("long")
+    filter(split(text, "\n"),
+      l => lineWords(l) >= minWordsPerLine && l.rlike(termClass))
+  }
+
+  /** [[c4LineFilter]]'s whole-document drop: `text` mentions "lorem ipsum"
+    * or contains `{` (code leakage). */
+  def c4DropsDoc(text: Column): Column =
+    lower(text).contains("lorem ipsum") || text.contains("{")
 
   /** CCNet-STYLE PERPLEXITY BUCKETS (Wenzek et al. 2020 §4.4) — rank each
     * document inside its `groupCol` stratum by corpus-LM negative

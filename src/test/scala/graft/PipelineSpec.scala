@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import org.apache.spark.graftspec.Bus
+import org.apache.spark.sql.graftbridge.Bus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -807,6 +807,35 @@ class PipelineSpec extends SparkSpec {
     assert(ids == Set(40L, 41L), s"got $ids")
     assert(cleaned.filter($"doc_id" === 40L).select("text").as[String]
       .head() == keeper)
+  }
+
+  test("E4 curate --c4-lines: building it fires no job beyond the " +
+    "near-dup pass's") {
+    import org.apache.spark.scheduler.SparkListenerJobStart
+    val sc = spark.sparkContext
+    // the C4 rule keeps every line, so both calls dedup the same text
+    val docs = (0L until 40L).map { i =>
+      (i, s"the subject$i and the object$i of the story$i went home.\n" +
+        s"the friend$i and the helper$i stayed in the year$i of the era$i.")
+    }.toDF("doc_id", "text")
+      .withColumn("lang", lit("en")).withColumn("source", lit("s"))
+      .withColumn("n_chars", length($"text"))
+    def buildJobs(c4Lines: Boolean): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      Bus.drain(sc)
+      sc.addSparkListener(listener)
+      try {
+        Pipelines.curate(docs, minJaccard = 0.5, c4Lines = c4Lines)
+        Bus.drain(sc)
+      } finally sc.removeSparkListener(listener)
+      jobs.get
+    }
+    val plain = buildJobs(c4Lines = false)
+    assert(buildJobs(c4Lines = true) == plain)
   }
 
   test("E4 curate --lang-model: a trained NB router replaces the " +
